@@ -21,13 +21,7 @@ _PLAN_MODULES = (
 
 def _load() -> None:
     for mod in _PLAN_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # plan modules land incrementally during the build
-            if e.name and e.name.startswith("mqtt2sql_spark"):
-                continue
-            raise
+        importlib.import_module(mod)
 
 
 _load()

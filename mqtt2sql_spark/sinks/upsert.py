@@ -3,29 +3,45 @@ a stream of message micro-batches (SURVEY.md §2 A5/A8-A10, §4.2 #2-3).
 
 The reference upserts row-by-row with ON DUPLICATE KEY UPDATE and lets DB
 triggers derive history (/root/reference/mqtt2sql.py:579-629,
-mysql.sql:66-91).  The Spark-first equivalent is a `foreachBatch` MERGE:
+mysql.sql:66-91).  The Spark-first equivalent is a `foreachBatch` MERGE.
 
-  per micro-batch
-    1. collapse the batch to latest-per-topic (map-side window);
-    2. merge with the current `mqtt` table — ts/value/qos/retain from the
-       newer row, id and history flags sticky (mqtt2sql.py:581 semantics:
-       ON DUPLICATE KEY UPDATE rewrites only the payload columns);
-    3. new topics get ids = max(id) + dense rank (mysql.sql:70 trigger);
-    4. history rows = enabled messages, minus consecutive-duplicate
-       values when diffonly — the *previous batch's* latest value per
-       topic (step-2 input) provides the cross-batch lag seed, so
-       diff-only semantics hold across micro-batch boundaries without a
-       separate state store.
+Per micro-batch, each input is read once and no probe job runs:
+
+  * the batch is persisted on entry and unpersisted in a `finally`; the
+    source's rows are computed by the first write and every later use
+    (the latest-per-topic collapse, the history rows, the publish) reads
+    the cached copy;
+  * the pre-batch `mqtt` version (current_mqtt(before_epoch=e)) is read
+    with MQTT_SCHEMA — no schema inference — and its max(id) comes from
+    the parquet footers' min/max statistics of that version, not from an
+    aggregate job (a footer without them fails the batch loudly);
+  * ONE full-outer merge of that version with the batch's latest row per
+    topic yields `merged`: payload columns from the newer side, id and
+    history flags sticky (mqtt2sql.py:581: ON DUPLICATE KEY UPDATE
+    rewrites only the payload columns), ids for unseen topics as
+    max(id) + dense rank by topic (mysql.sql:70 trigger).  The same
+    frame is the published version and, with the pre-batch value carried
+    along as the diff-only seed, the broadcast dimension of the history
+    rows — so diff-only semantics hold across micro-batch boundaries
+    without a second read of the pre-batch version or a state store;
+  * history rows = enabled messages, minus consecutive-duplicate values
+    when diffonly (lag over the batch, seeded with the pre-batch value).
+
+An empty batch (every message filtered out) runs the same plan: it
+publishes a version equal to the previous one and an empty history
+epoch, so both tables' contents stay unchanged.
 
 Storage is versioned parquet directories with an atomic _CURRENT pointer
 (a poor man's table format; swap for Delta/Iceberg MERGE INTO when the
 runtime has the jars — the call sites keep the same shape).  History is
-parquet partitioned by (epoch, date(ts)) — date for 100 TB partition
-pruning on time-range queries (SURVEY.md §7.1 M6), epoch so a replayed
-micro-batch dynamically OVERWRITES its own partitions instead of
-re-appending.  Combined with seeding each batch from the pre-batch mqtt
-version (current_mqtt(before_epoch=...)), every foreachBatch replay is a
-deterministic function of (pre-batch state, batch): at-least-once
+parquet laid out as mqtt_history/epoch=<e>/dt=<date(ts)>/ — date for
+partition pruning on time-range queries (SURVEY.md §7.1 M6), epoch so a
+replayed micro-batch replaces its own rows: each batch writes its
+history straight into its epoch directory in overwrite mode, which
+deletes whatever an earlier attempt of the same epoch left there.
+Combined with reading the pre-batch mqtt version (never the one the
+replayed epoch may already have published), every foreachBatch replay
+is a deterministic function of (pre-batch state, batch): at-least-once
 delivery converges for BOTH tables.
 """
 
@@ -34,6 +50,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -43,6 +60,32 @@ MQTT_SCHEMA = (
     "id long, ts timestamp, topic string, value binary, qos int, "
     "retain int, history_enable int, history_diffonly int"
 )
+HISTORY_SCHEMA = "ts timestamp, topicid long, value binary, dt date, epoch long"
+
+
+def _parquet_files(top: str):
+    for dirpath, _, names in os.walk(top):
+        for n in names:
+            if n.endswith(".parquet"):
+                yield os.path.join(dirpath, n)
+
+
+def max_id_from_footers(path: str) -> int:
+    """max(id) of the parquet table at ``path`` from its footers' column
+    statistics (0 for an empty table); raises when a non-empty row group
+    carries no min/max for ``id``."""
+    best = 0
+    for f in _parquet_files(path):
+        md = pq.read_metadata(f)
+        idx = md.schema.to_arrow_schema().get_field_index("id")
+        for rg in range(md.num_row_groups):
+            if md.row_group(rg).num_rows == 0:
+                continue
+            stats = md.row_group(rg).column(idx).statistics
+            if stats is None or not stats.has_min_max:
+                raise ValueError(f"{f}: row group {rg} has no min/max for id")
+            best = max(best, stats.max)
+    return best
 
 
 class MqttUpsertSink:
@@ -67,14 +110,8 @@ class MqttUpsertSink:
     def _pointer(self) -> str:
         return os.path.join(self.base_dir, "mqtt", "_CURRENT")
 
-    def current_mqtt(self, before_epoch: int | None = None) -> DataFrame | None:
-        """Latest published `mqtt` version; with ``before_epoch``, the
-        latest version written by an epoch STRICTLY BELOW it.  foreachBatch
-        is at-least-once — on replay of epoch e the pointer may already
-        name v{e} (the post-batch state), and seeding the merge/diff from
-        it would double-apply the batch.  Reading the pre-batch version
-        makes the whole batch (merge + history) a deterministic function
-        of (pre-batch state, batch), i.e. idempotent under replay."""
+    def _version_path(self, before_epoch: int | None = None) -> str | None:
+        """Directory of the version current_mqtt reads, or None."""
         ptr = self._pointer()
         if not os.path.exists(ptr):
             return None
@@ -89,18 +126,28 @@ class MqttUpsertSink:
             if not prior:
                 return None
             version = max(prior)
-        return self.spark.read.parquet(
-            os.path.join(self.base_dir, "mqtt", version)
-        )
+        return os.path.join(self.base_dir, "mqtt", version)
+
+    def current_mqtt(self, before_epoch: int | None = None) -> DataFrame | None:
+        """Latest published `mqtt` version; with ``before_epoch``, the
+        latest version written by an epoch STRICTLY BELOW it.  foreachBatch
+        is at-least-once — on replay of epoch e the pointer may already
+        name v{e} (the post-batch state), and seeding the merge/diff from
+        it would double-apply the batch.  Reading the pre-batch version
+        makes the whole batch (merge + history) a deterministic function
+        of (pre-batch state, batch), i.e. idempotent under replay."""
+        path = self._version_path(before_epoch)
+        if path is None:
+            return None
+        return self.spark.read.schema(MQTT_SCHEMA).parquet(path)
 
     def history(self) -> DataFrame:
+        """mqtt_history (ts, topicid, value, dt, epoch); empty until the
+        first history data file exists."""
         path = os.path.join(self.base_dir, "mqtt_history")
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            return self.spark.createDataFrame(
-                [], "ts timestamp, topicid long, value binary, dt date, epoch long"
-            )
+        if next(_parquet_files(path), None) is None:
+            return self.spark.createDataFrame([], HISTORY_SCHEMA)
+        return self.spark.read.schema(HISTORY_SCHEMA).parquet(path)
 
     def _publish_mqtt(self, df: DataFrame, epoch_id: int) -> None:
         version = f"v{epoch_id:020d}"
@@ -125,22 +172,29 @@ class MqttUpsertSink:
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         """batch: (ts, topic, value, qos, retain, event_id)."""
-        if not batch.take(1):
-            return
+        batch = batch.persist()
+        try:
+            self._merge(batch, epoch_id)
+        finally:
+            batch.unpersist()
+
+    def _merge(self, batch: DataFrame, epoch_id: int) -> None:
         # pre-batch state, even under replay (see current_mqtt docstring)
-        prev = self.current_mqtt(before_epoch=epoch_id)
+        prev_path = self._version_path(before_epoch=epoch_id)
+        if prev_path is None:
+            prev = self.spark.createDataFrame([], MQTT_SCHEMA)
+            max_id = 0
+        else:
+            prev = self.spark.read.schema(MQTT_SCHEMA).parquet(prev_path)
+            max_id = max_id_from_footers(prev_path)
         latest_b = latest_per_key(batch, "topic", ("ts", "event_id")).select(
             "ts", "topic", "value", "qos", "retain"
         )
 
-        if prev is None:
-            prev = self.spark.createDataFrame([], MQTT_SCHEMA)
-
         # -- merge: payload columns from the newer side, id+flags sticky --
         p = prev.alias("p")
         b = latest_b.alias("b")
-        joined = p.join(b, "topic", "full_outer")
-        merged = joined.select(
+        joined = p.join(b, "topic", "full_outer").select(
             F.col("topic"),
             F.col("p.id").alias("old_id"),
             F.coalesce("p.history_enable", F.lit(self.default_enable)).alias(
@@ -155,45 +209,29 @@ class MqttUpsertSink:
             F.coalesce("b.value", "p.value").alias("value"),
             F.coalesce("b.qos", "p.qos").alias("qos"),
             F.coalesce("b.retain", "p.retain").alias("retain"),
+            # the pre-batch value: the cross-batch diff-only seed
+            F.col("p.value").cast("string").alias("_seed_value"),
         )
-        # fresh dense ids for unseen topics: max(id)+rank (mysql.sql:70);
-        # the rank window only runs over the new-topic slice (tiny)
-        max_id = (prev.agg(F.max("id")).collect()[0][0]) or 0
-        new_ids = (
-            merged.filter(F.col("old_id").isNull())
-            .select("topic")
-            .withColumn(
-                "fresh_id",
-                (F.lit(max_id) + F.row_number().over(W.orderBy("topic"))).cast(
-                    "long"
-                ),
-            )
+        # fresh dense ids for unseen topics: max(id)+rank (mysql.sql:70).
+        # One window over the merge: unseen topics share the NULL window
+        # key and are ranked by topic in one (small) partition; known
+        # topics key on themselves, so they stay spread across partitions.
+        rank = F.row_number().over(
+            W.partitionBy(F.when(F.col("old_id").isNotNull(), F.col("topic")))
+            .orderBy("topic")
         )
-        merged = (
-            merged.join(F.broadcast(new_ids), "topic", "left")
-            .withColumn("id", F.coalesce("old_id", "fresh_id"))
-            .select(
-                "id",
-                "ts",
-                "topic",
-                "value",
-                "qos",
-                "retain",
-                "history_enable",
-                "history_diffonly",
-            )
+        merged = joined.withColumn(
+            "id", F.coalesce("old_id", (F.lit(max_id) + rank).cast("long"))
         )
 
         # -- history rows for this batch (cross-batch diff-only) ----------
-        dim = merged.select("topic", "id", "history_enable", "history_diffonly")
-        seed = prev.select(
-            "topic", F.col("value").cast("string").alias("_seed_value")
+        dim = merged.select(
+            "topic", "id", "history_enable", "history_diffonly", "_seed_value"
         )
         w_topic = W.partitionBy("topic").orderBy("ts", "event_id")
         hb = (
             batch.withColumn("value_str", F.col("value").cast("string"))
             .join(F.broadcast(dim), "topic")
-            .join(F.broadcast(seed), "topic", "left")
             .withColumn(
                 "_prev",
                 F.coalesce(
@@ -210,21 +248,26 @@ class MqttUpsertSink:
             )
         )
         hist = kept.select(
-            "ts",
-            F.col("id").alias("topicid"),
-            "value",
-            F.to_date("ts").alias("dt"),
-            F.lit(epoch_id).cast("long").alias("epoch"),
+            "ts", F.col("id").alias("topicid"), "value", F.to_date("ts").alias("dt")
         )
-        # epoch-idempotent history: partition by (epoch, dt) and overwrite
-        # only the partitions this batch touches — a replayed epoch
-        # replaces its own earlier rows instead of re-appending them, so
-        # at-least-once foreachBatch converges for history too
-        hist.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch", "dt").parquet(
-            os.path.join(self.base_dir, "mqtt_history")
+        # epoch-idempotent history: this batch owns mqtt_history/epoch=<e>/
+        # and overwrites it whole, so a replayed epoch replaces its own
+        # earlier rows instead of re-appending them
+        hist.write.mode("overwrite").partitionBy("dt").parquet(
+            os.path.join(self.base_dir, "mqtt_history", f"epoch={epoch_id}")
         )
 
         # publish last so history readers never see rows for unpublished ids
-        self._publish_mqtt(merged, epoch_id)
+        self._publish_mqtt(
+            merged.select(
+                "id",
+                "ts",
+                "topic",
+                "value",
+                "qos",
+                "retain",
+                "history_enable",
+                "history_diffonly",
+            ),
+            epoch_id,
+        )

@@ -103,12 +103,16 @@ class FileSpoolTransport:
     """Polls a spool directory of message files — the durable-WAL bridge
     deployment shape (a tiny paho daemon appends spool files; Spark
     consumes them).  Each file holds lines
-    ``topic<TAB>hex(payload)<TAB>qos<TAB>retain``; files are consumed in
-    sorted-name order exactly once (per reader lifetime)."""
+    ``topic<TAB>hex(payload)<TAB>qos<TAB>retain``; every message is
+    delivered exactly once (per reader lifetime), files in sorted-name
+    order.  A poll that stops inside a file remembers how many of its
+    messages were delivered and resumes there; a file is done only once
+    all of it was delivered."""
 
     def __init__(self, spool_dir: str) -> None:
         self.spool_dir = spool_dir
         self._done: set[str] = set()
+        self._offset: dict[str, int] = {}  # messages delivered per file
 
     def connect(self) -> None:
         pass
@@ -122,24 +126,27 @@ class FileSpoolTransport:
         except FileNotFoundError:
             return out
         for name in names:
+            if len(out) >= max_n:
+                break
             # '.'-prefixed = hidden/in-progress; '_'-prefixed = metadata
             # (_manifest, _SUCCESS — the spool SINK's commit log)
             if name in self._done or name.startswith((".", "_")):
                 continue
             path = os.path.join(self.spool_dir, name)
             with open(path) as f:
-                for line in f:
-                    line = line.rstrip("\n")
-                    if not line:
-                        continue
-                    topic, hexpayload, qos, retain = line.split("\t")
-                    out.append(
-                        (topic, bytes.fromhex(hexpayload), int(qos), int(retain))
-                    )
-            self._done.add(name)
-            if len(out) >= max_n:
-                break
-        return out[:max_n]
+                lines = [ln for ln in f.read().split("\n") if ln]
+            start = self._offset.pop(name, 0)
+            take = lines[start : start + max_n - len(out)]
+            for line in take:
+                topic, hexpayload, qos, retain = line.split("\t")
+                out.append(
+                    (topic, bytes.fromhex(hexpayload), int(qos), int(retain))
+                )
+            if start + len(take) < len(lines):
+                self._offset[name] = start + len(take)
+            else:
+                self._done.add(name)
+        return out
 
     def close(self) -> None:
         pass

@@ -128,3 +128,24 @@ def test_file_spool_transport_tolerates_missing_dir(tmp_path):
 
     t = FileSpoolTransport(str(tmp_path / "nonexistent"))
     assert t.poll(10) == []
+
+
+def test_file_spool_transport_resumes_inside_a_file(tmp_path):
+    """A poll that stops inside a file resumes there on the next poll:
+    repeated polls deliver every message of a file larger than max_n,
+    then the next file's, in order, with no duplicates."""
+    from mqtt2sql_spark.sources.mqtt import FileSpoolTransport
+
+    def lines(ids):
+        return "".join(f"t/{i}\t{str(i).encode().hex()}\t0\t0\n" for i in ids)
+
+    (tmp_path / "000.msg").write_text(lines(range(120)))
+    (tmp_path / "001.msg").write_text(lines(range(120, 150)))
+    t = FileSpoolTransport(str(tmp_path))
+    got, sizes = [], []
+    for _ in range(4):
+        batch = t.poll(50)
+        sizes.append(len(batch))
+        got.extend(batch)
+    assert sizes == [50, 50, 50, 0]
+    assert got == [(f"t/{i}", str(i).encode(), 0, 0) for i in range(150)]

@@ -216,3 +216,17 @@ def test_red_queries_are_inside_the_window():
                 f"{name} is red at its latest driver witness but absent "
                 "from registry._PRIORITY — run tools/rotation_plan.py"
             )
+
+
+def test_missing_plan_module_fails_loudly(monkeypatch):
+    """A plan module that cannot be imported must fail the registry load:
+    skipping it would silently drop a whole family of queries."""
+    from mqtt2sql_spark import registry
+
+    monkeypatch.setattr(
+        registry,
+        "_PLAN_MODULES",
+        registry._PLAN_MODULES + ("mqtt2sql_spark.plans.no_such_module",),
+    )
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        registry._load()

@@ -780,3 +780,125 @@ def test_registry_processor_contract_offline():
     assert final["last_ts"] == tail["ts"]
     # intermediate rows carried the running count
     assert [int(e.iloc[0]["n_messages"]) for e in emitted] == [3, 4, 5]
+
+
+# --- MqttUpsertSink per-batch contract ---------------------------------------
+
+
+def test_upsert_sink_reads_each_batch_once(spark, tmp_path):
+    """The sink persists its micro-batch, so the source rows are computed
+    once per batch: the progress' numInputRows, summed over the stream,
+    equals the number of messages the source admitted."""
+    from mqtt2sql_spark.sources.mqtt import MqttDataSource, memory_queue
+
+    msgs = [(f"sensors/t{i % 7}", str(i % 3).encode(), 0, 0) for i in range(40)]
+    msgs += [("status/up", b"1", 0, 0), ("sensors/skip", b"2", 0, 0)]
+
+    class SeededMqtt(MqttDataSource):
+        # the stream reader runs in its own Python worker: fill the memory
+        # transport's queue in that process
+        @classmethod
+        def name(cls) -> str:
+            return "mqtt_seeded"
+
+        def simpleStreamReader(self, schema):
+            memory_queue("once").extend(msgs)
+            return super().simpleStreamReader(schema)
+
+    spark.dataSource.register(SeededMqtt)
+    stream = (
+        spark.readStream.format("mqtt_seeded")
+        .option("transport", "memory")
+        .option("memoryKey", "once")
+        .option("maxPerTrigger", "15")
+        .option("excludeTopics", "sensors/skip")
+        .load()
+    )
+    sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
+    q = start_ingest(
+        spark, stream, sink, str(tmp_path / "ckpt"),
+        subscribe_patterns=["sensors/#"], exclude_topics=["sensors/skip"],
+    )
+    _drain(q)
+
+    admitted = len(msgs) - 1  # sensors/skip is excluded at the source
+    assert sum(p["numInputRows"] for p in q.recentProgress) == admitted
+    assert sink.current_mqtt().count() == 7
+
+
+def _state(sink):
+    mqtt = sorted(
+        (r.id, r.topic, bytes(r.value), r.ts) for r in sink.current_mqtt().collect()
+    )
+    hist = sorted(
+        (r.topicid, bytes(r.value), r.ts) for r in sink.history().collect()
+    )
+    return mqtt, hist
+
+
+def test_upsert_sink_empty_batch_leaves_tables_unchanged(spark, tmp_path):
+    """A batch whose messages are all filtered out still runs the merge;
+    both tables' contents stay as they were."""
+    sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
+    sink.process_batch(_mk_messages(spark, [("a", 0, "x", 1), ("b", 1, "p", 2)]), 0)
+    before = _state(sink)
+
+    filtered = apply_filters(
+        _mk_messages(spark, [("status/up", 5, "1", 3)]), subscribe_patterns=["a", "b"]
+    )
+    sink.process_batch(filtered, 1)
+    assert _state(sink) == before
+    sink.process_batch(filtered, 1)  # and under replay
+    assert _state(sink) == before
+
+
+def test_upsert_sink_replay_with_new_topics_keeps_ids(spark, tmp_path):
+    """Replaying an epoch whose version was already published derives
+    new topics' ids from the PRE-batch version's max(id): ids stay dense
+    and equal to the first attempt's."""
+    sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
+    sink.process_batch(_mk_messages(spark, [("a", 0, "x", 1), ("b", 1, "p", 2)]), 0)
+    b1 = _mk_messages(spark, [("b", 10, "q", 3), ("d", 11, "r", 4), ("c", 12, "s", 5)])
+    sink.process_batch(b1, 1)
+    first = _state(sink)
+    sink.process_batch(b1, 1)  # replay: the pointer already names v1
+    assert _state(sink) == first
+    ids = {r.topic: r.id for r in sink.current_mqtt().collect()}
+    assert ids == {"a": 1, "b": 2, "c": 3, "d": 4}
+
+    sink.process_batch(_mk_messages(spark, [("e", 20, "t", 6)]), 2)
+    ids = {r.topic: r.id for r in sink.current_mqtt().collect()}
+    assert ids == {"a": 1, "b": 2, "c": 3, "d": 4, "e": 5}
+
+
+def test_max_id_from_footers_requires_statistics(tmp_path):
+    """max(id) comes from the footers' min/max statistics; a data file
+    written without them fails loudly instead of restarting ids."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mqtt2sql_spark.sinks.upsert import max_id_from_footers
+
+    t = pa.table({"id": pa.array([3, 9, 4], pa.int64())})
+    pq.write_table(t, str(tmp_path / "with.parquet"))
+    assert max_id_from_footers(str(tmp_path)) == 9
+    pq.write_table(t, str(tmp_path / "without.parquet"), write_statistics=False)
+    with pytest.raises(ValueError, match="min/max"):
+        max_id_from_footers(str(tmp_path))
+
+
+def test_upsert_sink_history_raises_on_corrupt_file(spark, tmp_path):
+    """history() is empty before the first history file exists; after
+    that, an unreadable file raises instead of reading as no history."""
+    sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
+    assert sink.history().collect() == []
+    assert sink.history().columns == ["ts", "topicid", "value", "dt", "epoch"]
+
+    sink.process_batch(_mk_messages(spark, [("a", 0, "x", 1)]), 0)
+    assert sink.history().count() == 1
+    files = list((tmp_path / "tables" / "mqtt_history").rglob("*.parquet"))
+    assert files
+    for f in files:
+        f.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        sink.history().collect()
