@@ -143,7 +143,7 @@ def main(argv: list[str] | None = None) -> int:
     from mqtt2sql_spark.sinks.upsert import MqttUpsertSink
     from mqtt2sql_spark.sources.mqtt import MqttDataSource
     from mqtt2sql_spark.streaming.ops import install_graceful_shutdown
-    from mqtt2sql_spark.streaming.pipeline import apply_filters
+    from mqtt2sql_spark.streaming.pipeline import start_ingest
 
     log = configure_logging(args.verbose, args.debug, args.logfile)
 
@@ -160,55 +160,41 @@ def main(argv: list[str] | None = None) -> int:
     spark.dataSource.register(MqttDataSource)
 
     subscribe_patterns: list[str] = list(args.topic)
-    reader = (
-        spark.readStream.format("mqtt")
-        .option("transport", args.transport)
-        .option("maxPerTrigger", str(args.max_per_trigger))
-        .option("timezone", args.timezone)
-        .option("keepalive", str(args.keepalive))
+    # validate the URL grammar up front (fail fast like the reference's
+    # parseargs) and collect subscription patterns; ALL URLs reach the
+    # transport — every subscription is actually made
+    for url in urls:
+        subscribe_patterns.extend(parse_mqtt_url(url).topics)
+    options = {
+        "transport": args.transport,
+        "maxPerTrigger": str(args.max_per_trigger),
+        "timezone": args.timezone,
+        "keepalive": str(args.keepalive),
+        "url": " ".join(urls),
+        "topics": ",".join(args.topic),
+        "excludeTopics": ",".join(args.exclude_topic),
+        "spoolDir": args.spool_dir,
+        "walDir": args.wal_dir,
+        "caFile": args.mqtt_cafile,
+        "certFile": args.mqtt_certfile,
+        "keyFile": args.mqtt_keyfile,
+        "tlsInsecure": "true" if args.mqtt_insecure else None,
+        "memoryKey": args.memory_key if args.transport == "memory" else None,
+    }
+    # unset options are left out, so the source applies its own defaults
+    reader = spark.readStream.format("mqtt").options(
+        **{k: v for k, v in options.items() if v}
     )
-    if urls:
-        # validate the URL grammar up front (fail fast like the
-        # reference's parseargs) and collect subscription patterns; ALL
-        # URLs reach the transport — every subscription is actually made
-        for url in urls:
-            ep = parse_mqtt_url(url)
-            subscribe_patterns.extend(ep.topics)
-        reader = reader.option("url", " ".join(urls))
-    if args.topic:
-        reader = reader.option("topics", ",".join(args.topic))
-    if args.exclude_topic:
-        reader = reader.option("excludeTopics", ",".join(args.exclude_topic))
-    if args.spool_dir:
-        reader = reader.option("spoolDir", args.spool_dir)
-    if args.wal_dir:
-        reader = reader.option("walDir", args.wal_dir)
-    if args.mqtt_cafile:
-        reader = reader.option("caFile", args.mqtt_cafile)
-    if args.mqtt_certfile:
-        reader = reader.option("certFile", args.mqtt_certfile)
-    if args.mqtt_keyfile:
-        reader = reader.option("keyFile", args.mqtt_keyfile)
-    if args.mqtt_insecure:
-        reader = reader.option("tlsInsecure", "true")
-    if args.transport == "memory":
-        reader = reader.option("memoryKey", args.memory_key)
 
-    stream = apply_filters(
+    log.info("starting query (transport=%s, once=%s)", args.transport, args.once)
+    query = start_ingest(
         reader.load(),
+        MqttUpsertSink(spark, args.storage_dir),
+        args.checkpoint_dir,
         subscribe_patterns=subscribe_patterns or None,
         exclude_topics=args.exclude_topic or None,
+        once=args.once,
     )
-    sink = MqttUpsertSink(spark, args.storage_dir)
-    writer = (
-        stream.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", args.checkpoint_dir)
-        .outputMode("update")
-    )
-    if args.once:
-        writer = writer.trigger(availableNow=True)
-    log.info("starting query (transport=%s, once=%s)", args.transport, args.once)
-    query = writer.start()
     install_graceful_shutdown(spark)
     query.awaitTermination()
     return 0

@@ -1,4 +1,4 @@
-"""Engine configuration + MQTT URL grammar (SURVEY.md §2 B1).
+"""MQTT URL grammar (SURVEY.md §2 B1).
 
 The reference accepts broker URLs of the form
     mqtt[s]://[username[:password]@]host[:port][/topic[/...]]
@@ -10,7 +10,7 @@ topic '#' (everything).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
 
@@ -26,26 +26,6 @@ class MqttEndpoint:
     @property
     def use_tls(self) -> bool:
         return self.scheme == "mqtts"
-
-
-@dataclass(frozen=True)
-class EngineConfig:
-    """Operational knobs mirroring the reference's envelope
-    (BASELINE.md): bounded in-flight writes → maxOffsetsPerTrigger;
-    retry budgets → Spark task/connector retries."""
-
-    endpoints: tuple[MqttEndpoint, ...] = ()
-    exclude_topics: tuple[str, ...] = ()
-    timezone: str = "UTC"  # mqtt2sql.py:125 default
-    max_messages_per_trigger: int = 10_000
-    connect_retries: int = 10  # --sql-connection-retry default
-    connect_retry_start_delay_s: float = 1.0  # additive backoff (code wins
-    # over the "doubled" help text — mqtt2sql.py:562 vs :335)
-    keepalive_s: int = 60
-    ca_file: str | None = None
-    cert_file: str | None = None
-    key_file: str | None = None
-    tls_insecure: bool = False
 
 
 def parse_mqtt_url(url: str) -> MqttEndpoint:

@@ -7,8 +7,9 @@ suppressing rows equal to the immediately-previous value per topic when
 always recorded when enabled — SURVEY.md §4.3).
 
 Batch operator: broadcast join against the control dimension + one lag
-window per topic.  The streaming twin keeps last-value state per topic
-(streaming/diffonly.py) so suppression works across micro-batches.
+window per topic.  The streaming form (sinks/upsert.MqttUpsertSink) seeds
+that lag with the pre-batch `mqtt` value per topic, so suppression works
+across micro-batches without a state store.
 """
 
 from __future__ import annotations
@@ -22,15 +23,21 @@ def history_rows(
     control: DataFrame,
     value_col: str = "value_str",
     order: tuple[str, str] = ("ts", "event_id"),
+    seed_col: str | None = None,
 ) -> DataFrame:
     """Messages that qualify for history under the per-topic flags.
 
     `control` must carry (topic, id, history_enable, history_diffonly);
-    output keeps all message columns plus topicid.
+    output keeps all message columns plus topicid.  `seed_col`, a
+    `control` column, holds each topic's value from before `messages`
+    (NULL for a new topic): the first message is diffed against it.
     """
     w = W.partitionBy("topic").orderBy(*order)
+    prev = F.lag(value_col).over(w)
+    if seed_col:
+        prev = F.coalesce(prev, F.col(seed_col))
     base = messages.join(F.broadcast(control), "topic").withColumn(
-        "_prev", F.lag(value_col).over(w)
+        "_prev", prev
     )
     kept = base.filter(
         (F.col("history_enable") == 1)
@@ -40,6 +47,7 @@ def history_rows(
             | (F.col("_prev") != F.col(value_col))
         )
     )
-    return kept.drop("_prev", "history_enable", "history_diffonly").withColumnRenamed(
-        "id", "topicid"
-    )
+    kept = kept.drop("_prev", "history_enable", "history_diffonly")
+    if seed_col:
+        kept = kept.drop(seed_col)
+    return kept.withColumnRenamed("id", "topicid")

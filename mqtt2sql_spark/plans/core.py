@@ -225,7 +225,8 @@ def history_append_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="A10 consecutive-change dedup (mysql.sql:87; README.md:209-210): "
     "suppress history rows equal to the previous value per topic — "
-    "lag window per topic; cross-batch streaming form in streaming/.",
+    "lag window per topic; cross-batch streaming form in "
+    "sinks/upsert.MqttUpsertSink (pre-batch value seeds the lag).",
     bench=True,
 )
 def history_diffonly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,11 +901,11 @@ def sequence_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "backfill result) and arrival order (event_id, what a streaming "
     "pass without event-time buffering would produce).  disagree_ppm "
     "is the exact fraction of rows whose keep/drop decision flips — "
-    "the data-loss/duplication budget that justifies the watermarked "
-    "applyInPandasWithState design over naive arrival-order "
-    "processing (streaming/diffonly.py).  Two lag windows over the "
-    "same topic shuffle, one fold; IS DISTINCT FROM handles the "
-    "first-message NULL identically on both engines.",
+    "the data-loss/duplication budget of deciding diff-only history in "
+    "arrival order, as the streaming upsert sink "
+    "(sinks/upsert.MqttUpsertSink) does across micro-batches.  Two lag "
+    "windows over the same topic shuffle, one fold; IS DISTINCT FROM "
+    "handles the first-message NULL identically on both engines.",
     tags=("core", "streaming"),
 )
 def diffonly_order_sensitivity(

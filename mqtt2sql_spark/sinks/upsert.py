@@ -24,8 +24,9 @@ Per micro-batch, each input is read once and no probe job runs:
     along as the diff-only seed, the broadcast dimension of the history
     rows — so diff-only semantics hold across micro-batch boundaries
     without a second read of the pre-batch version or a state store;
-  * history rows = enabled messages, minus consecutive-duplicate values
-    when diffonly (lag over the batch, seeded with the pre-batch value).
+  * history rows = operators/history.history_rows, the batch operator
+    (enabled messages, minus consecutive-duplicate values when diffonly),
+    with its lag over the batch seeded by the pre-batch value.
 
 An empty batch (every message filtered out) runs the same plan: it
 publishes a version equal to the previous one and an empty history
@@ -54,6 +55,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mqtt2sql_spark.operators.history import history_rows
 from mqtt2sql_spark.operators.upsert import latest_per_key
 
 MQTT_SCHEMA = (
@@ -228,28 +230,11 @@ class MqttUpsertSink:
         dim = merged.select(
             "topic", "id", "history_enable", "history_diffonly", "_seed_value"
         )
-        w_topic = W.partitionBy("topic").orderBy("ts", "event_id")
-        hb = (
-            batch.withColumn("value_str", F.col("value").cast("string"))
-            .join(F.broadcast(dim), "topic")
-            .withColumn(
-                "_prev",
-                F.coalesce(
-                    F.lag("value_str").over(w_topic), F.col("_seed_value")
-                ),
-            )
-        )
-        kept = hb.filter(
-            (F.col("history_enable") == 1)
-            & (
-                (F.col("history_diffonly") == 0)
-                | F.col("_prev").isNull()
-                | (F.col("_prev") != F.col("value_str"))
-            )
-        )
-        hist = kept.select(
-            "ts", F.col("id").alias("topicid"), "value", F.to_date("ts").alias("dt")
-        )
+        hist = history_rows(
+            batch.withColumn("value_str", F.col("value").cast("string")),
+            dim,
+            seed_col="_seed_value",
+        ).select("ts", "topicid", "value", F.to_date("ts").alias("dt"))
         # epoch-idempotent history: this batch owns mqtt_history/epoch=<e>/
         # and overwrites it whole, so a replayed epoch replaces its own
         # earlier rows instead of re-appending them

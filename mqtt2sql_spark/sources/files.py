@@ -32,14 +32,6 @@ DOCUMENTS_SCHEMA = T.StructType(
     ]
 )
 
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
 EVENTS_CSV_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -77,10 +69,6 @@ def write_documents_jsonl(df: DataFrame, path: str, shards: int = 0) -> None:
     if shards > 0:
         df = df.repartition(shards)
     df.write.mode("overwrite").json(path)
-
-
-def read_embeddings_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(EMBEDDINGS_SCHEMA).json(path)
 
 
 def read_events_csv(spark: SparkSession, path: str) -> DataFrame:

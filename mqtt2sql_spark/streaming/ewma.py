@@ -1,10 +1,10 @@
 """Per-key EWMA anomaly detection — batch/stream parity pair.
 
-The second genuinely stateful operator in the engine (after
-streaming/diffonly.py): an exponentially-weighted mean/variance per key,
-flagging points whose squared deviation from the PRE-UPDATE mean exceeds
-k²·var — the standard online drift/outlier monitor for sensor fleets
-(per-topic) at MQTT scale.  The reference stores raw history and leaves
+The engine's one arbitrary-state operator (applyInPandasWithState): an
+exponentially-weighted mean/variance per key, flagging points whose
+squared deviation from the PRE-UPDATE mean exceeds k²·var — the
+standard online drift/outlier monitor for sensor fleets (per-topic) at
+MQTT scale.  The reference stores raw history and leaves
 analysis to SQL readers (README.md:228-235); this pushes the monitor
 into the stream so 100 TB of raw points never need a second pass.
 
@@ -19,7 +19,7 @@ recurrence runs in both forms:
 
 Identical Python floats on both paths ⇒ the stream over any slicing of
 the input equals the batch output exactly (tested), the same
-batch/stream-parity contract the diffonly operator proves.
+batch/stream-parity contract the upsert sink's diff-only history meets.
 
 Recurrence (alpha-EWMA, Welford-flavored EW variance):
     flag     = n >= min_n and (x - mean)² > k²·max(var, eps)

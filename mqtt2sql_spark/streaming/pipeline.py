@@ -64,17 +64,22 @@ def apply_filters(
 
 
 def start_ingest(
-    spark: SparkSession,
     stream: DataFrame,
     sink: MqttUpsertSink,
     checkpoint_dir: str,
     subscribe_patterns: list[str] | None = None,
     exclude_topics: list[str] | None = None,
+    once: bool = False,
 ) -> StreamingQuery:
+    """Filter the message stream and start the upsert sink on it.  With
+    `once`, the query drains what is available and stops (the daemon's
+    --once catch-up mode) instead of running until stopped."""
     filtered = apply_filters(stream, subscribe_patterns, exclude_topics)
-    return (
+    writer = (
         filtered.writeStream.foreachBatch(sink.process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
-        .start()
     )
+    if once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

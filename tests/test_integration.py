@@ -138,23 +138,32 @@ def test_checkpoint_recovery_resumes_without_duplicates(spark, tmp_path):
 
     write("000.parquet", [("a", 0, "v1", 1), ("b", 1, "w1", 2)])
     q = start_ingest(
-        spark, message_file_stream(spark, str(input_dir) + "/*"), sink, ckpt
+        message_file_stream(spark, str(input_dir) + "/*"), sink, ckpt
     )
     q.processAllAvailable()
     q.stop()
 
-    # new file arrives while the query is down
-    write("001.parquet", [("a", 10, "v2", 3), ("c", 11, "x1", 4)])
+    # new file arrives while the query is down; b repeats its value
+    write(
+        "001.parquet",
+        [("a", 10, "v2", 3), ("c", 11, "x1", 4), ("b", 12, "w1", 5)],
+    )
     q2 = start_ingest(
-        spark, message_file_stream(spark, str(input_dir) + "/*"), sink, ckpt
+        message_file_stream(spark, str(input_dir) + "/*"), sink, ckpt
     )
     q2.processAllAvailable()
     q2.stop()
 
-    mqtt = {r.topic: bytes(r.value).decode() for r in sink.current_mqtt().collect()}
-    assert mqtt == {"a": "v2", "b": "w1", "c": "x1"}
+    mqtt = {
+        r.topic: (bytes(r.value).decode(), r.ts.second)
+        for r in sink.current_mqtt().collect()
+    }
+    # the repeat still upserts b's timestamp
+    assert mqtt == {"a": ("v2", 10), "b": ("w1", 12), "c": ("x1", 11)}
     hist = [bytes(r.value).decode() for r in sink.history().collect()]
-    # no duplicates from the restart: v1,w1 from run 1; v2,x1 from run 2
+    # no duplicates from the restart: v1,w1 from run 1; v2,x1 from run 2.
+    # b's unchanged repeat adds no row: the diff-only seed is the pre-batch
+    # mqtt table, which the restart reads back from storage
     assert sorted(hist) == ["v1", "v2", "w1", "x1"]
 
 
@@ -303,24 +312,18 @@ def test_cli_daemon_once_drains_spool(tmp_path):
 
 
 def test_pipeline_capstone_filters_diffonly_spool_compact(spark, tmp_path):
-    """End-to-end: file stream -> subscription/exclusion filters ->
-    stateful diff-only suppression -> exactly-once spool sink ->
-    compaction.  The compacted spool must contain exactly the batch
-    history semantics (diffonly RLE per topic, excluded topic absent),
-    with every epoch still manifest-committed."""
+    """End-to-end on the daemon's path: file stream -> start_ingest
+    (subscription filter) -> MqttUpsertSink.  History must hold the batch
+    semantics across micro-batches (diff-only run-length encoding per
+    topic) and the unsubscribed topic must reach neither table.  Spool
+    commit and compaction are covered by tests/test_spool_sink.py."""
     import datetime as dt
-    import json
-    import os
 
-    from pyspark.sql import functions as F
-
-    from mqtt2sql_spark.sinks.compact import compact_spool
-    from mqtt2sql_spark.sinks.spool import register_spool_sink
-    from mqtt2sql_spark.streaming.diffonly import diffonly_stream
+    from mqtt2sql_spark.sinks.upsert import MqttUpsertSink
     from mqtt2sql_spark.streaming.pipeline import (
         MESSAGE_SCHEMA,
-        apply_filters,
         message_file_stream,
+        start_ingest,
     )
 
     base = dt.datetime(2024, 1, 1, 9, 0, 0)
@@ -342,37 +345,24 @@ def test_pipeline_capstone_filters_diffonly_spool_compact(spark, tmp_path):
             str(in_dir / f"s{i}.parquet")
         )
 
-    register_spool_sink(spark)
-    stream = message_file_stream(spark, str(in_dir) + "/*")
-    filtered = apply_filters(
-        stream, subscribe_patterns=["s/#"], exclude_topics=[]
-    ).withColumn("value_str", F.col("value").cast("string")).select(
-        "topic", "ts", "value_str", "event_id"
-    )
-    spool = str(tmp_path / "spool")
-    q = (
-        diffonly_stream(filtered)
-        .writeStream.format("spool")
-        .option("path", spool)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
+    sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
+    q = start_ingest(
+        message_file_stream(spark, str(in_dir) + "/*"),
+        sink,
+        str(tmp_path / "ckpt"),
+        subscribe_patterns=["s/#"],
     )
     q.processAllAvailable()
     q.stop()
 
-    stats = compact_spool(spool, target_bytes=150)
-    assert stats["files_after"] <= stats["files_before"]
-
-    rows = []
-    with open(os.path.join(spool, "_manifest")) as f:
-        entries = [json.loads(line) for line in f if line.strip()]
-    for e in entries:
-        for fname in e["files"]:
-            with open(os.path.join(spool, fname)) as fh:
-                rows.extend(json.loads(line) for line in fh if line.strip())
-    got = sorted((r["topic"], r["value_str"]) for r in rows)
-    # diffonly per topic: a: x,x,y -> x,y ; b: p,q,q -> p,q ; noise filtered
-    assert got == [
-        ("s/a", "x"), ("s/a", "y"), ("s/b", "p"), ("s/b", "q")
+    ids = {r.topic: r.id for r in sink.current_mqtt().collect()}
+    assert sorted(ids) == ["s/a", "s/b"]  # noise never subscribed
+    topic_of = {i: t for t, i in ids.items()}
+    got = [
+        (topic_of[r.topicid], bytes(r.value).decode())
+        for r in sink.history().orderBy("ts").collect()
     ]
+    # diffonly per topic: a: x,x,y -> x,y ; b: p,q,q -> p,q
+    assert [v for t, v in got if t == "s/a"] == ["x", "y"]
+    assert [v for t, v in got if t == "s/b"] == ["p", "q"]
+    assert len(got) == 4

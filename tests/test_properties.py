@@ -407,3 +407,58 @@ def test_mannwhitney_matches_python_reference(spark, samples, n_parts):
     assert (row.n_a, row.n_b, row.u2_a, row.u2_b) == (
         na, nb, u2a, 2 * na * nb - u2a
     )
+
+
+def _count_relation(spark, rel):
+    return spark.createDataFrame(rel, "value double, ca long, cb long")
+
+
+def _two_sample_reference(rel):
+    """Exact (n_a, n_b, d_num, u2_a) from (value, ca, cb) counts in Python
+    integers: ECDF cross-multiplied gap and doubled midrank sum."""
+    na = sum(ca for _, ca, _ in rel)
+    nb = sum(cb for _, _, cb in rel)
+    cca = ccb = cprev = r2a = d_num = 0
+    for _, ca, cb in sorted(rel):
+        cca, ccb = cca + ca, ccb + cb
+        d_num = max(d_num, abs(cca * nb - ccb * na))
+        r2a += ca * (2 * cprev + ca + cb + 1)
+        cprev += ca + cb
+    return na, nb, d_num, r2a - na * (na + 1)
+
+
+def test_mannwhitney_exact_past_int64_crossover(spark):
+    """n_a * (n_a + 1) > 2^63: the rank-sum products must stay exact (the
+    DECIMAL(38,0) widening), not overflow a long."""
+    import pyspark.sql.functions as SF
+
+    from mqtt2sql_spark.operators.stats import mannwhitney_u
+
+    rel = [(1.0, 3_500_000_000, 0), (2.0, 0, 1), (3.0, 1, 0)]
+    na, nb, _, u2a = _two_sample_reference(rel)
+    assert na * (na + 1) > 2**63
+    row = mannwhitney_u(
+        _count_relation(spark, rel), SF.floor("value").cast("long")
+    ).collect()[0]
+    assert (row.n_a, row.n_b, row.u2_a, row.u2_b) == (
+        na, nb, u2a, 2 * na * nb - u2a
+    ) == (3_500_000_001, 1, 2, 7_000_000_000)
+
+
+def test_ks_statistic_exact_just_below_int64_limit(spark):
+    """n_a * n_b just below 2^63: d_num and d_den come back exact."""
+    import pyspark.sql.functions as SF
+
+    from mqtt2sql_spark.operators.stats import ks_statistic
+
+    n = 3_037_000_499  # floor(sqrt(2^63))
+    rel = [(1.0, n - 1, 0), (2.0, 0, n), (3.0, 1, 0)]
+    na, nb, d_num, _ = _two_sample_reference(rel)
+    assert 2**63 - 2**33 < na * nb < 2**63
+    row = ks_statistic(
+        _count_relation(spark, rel), SF.floor("value").cast("long")
+    ).collect()[0]
+    assert (row.n_a, row.n_b, row.d_num, row.d_den) == (
+        na, nb, d_num, na * nb
+    )
+    assert row.argmax_v_fp == 10_000

@@ -67,7 +67,7 @@ def _drain(q):
 def test_stream_converges_to_batch_latest(spark, staged, tmp_path):
     sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
     stream = message_file_stream(spark, str(staged) + "/*")
-    q = start_ingest(spark, stream, sink, str(tmp_path / "ckpt"))
+    q = start_ingest(stream, sink, str(tmp_path / "ckpt"))
     _drain(q)
 
     got = {
@@ -87,7 +87,7 @@ def test_stream_converges_to_batch_latest(spark, staged, tmp_path):
 def test_stream_history_is_cross_batch_diffonly(spark, staged, tmp_path):
     sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
     stream = message_file_stream(spark, str(staged) + "/*")
-    q = start_ingest(spark, stream, sink, str(tmp_path / "ckpt"))
+    q = start_ingest(stream, sink, str(tmp_path / "ckpt"))
     _drain(q)
 
     hist = sink.history().orderBy("ts").collect()
@@ -107,7 +107,7 @@ def test_stream_history_is_cross_batch_diffonly(spark, staged, tmp_path):
 def test_stream_matches_batch_history_operator(spark, staged, tmp_path):
     sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
     stream = message_file_stream(spark, str(staged) + "/*")
-    q = start_ingest(spark, stream, sink, str(tmp_path / "ckpt"))
+    q = start_ingest(stream, sink, str(tmp_path / "ckpt"))
     _drain(q)
 
     all_msgs = _mk_messages(spark, [r for s in SLICES for r in s]).withColumn(
@@ -143,150 +143,6 @@ def test_streaming_filters(spark, staged, tmp_path):
     _drain(q)
     rows = spark.read.parquet(str(out_dir)).collect()
     assert {r.topic for r in rows} == {"a", "c"}
-
-
-def test_stateful_diffonly_across_batches(spark, staged, tmp_path):
-    from mqtt2sql_spark.streaming.diffonly import diffonly_stream
-
-    stream = message_file_stream(spark, str(staged) + "/*").withColumn(
-        "value_str", F.col("value").cast("string")
-    ).select("topic", "ts", "value_str", "event_id")
-    out_dir = tmp_path / "out"
-    q = (
-        diffonly_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .outputMode("append")
-        .start()
-    )
-    _drain(q)
-    got = sorted(
-        (r.topic, r.value_str)
-        for r in spark.read.parquet(str(out_dir)).collect()
-    )
-    assert got == [
-        ("a", "x"), ("a", "y"), ("a", "z"),
-        ("b", "p"), ("b", "r"),
-        ("c", "q"),
-    ]
-
-
-def test_stateful_diffonly_recovers_state_across_restart(spark, tmp_path):
-    """Kill the query between micro-batches (TTL active, RocksDB store)
-    and restart from the same checkpoint: the recovered last-value state
-    must still suppress an unchanged repeat — the restart-recovery path
-    of the state store contract."""
-    from mqtt2sql_spark.streaming.diffonly import (
-        diffonly_stream,
-        enable_rocksdb_state_store,
-    )
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    out_dir = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-
-    def run_once():
-        stream = (
-            message_file_stream(spark, str(input_dir) + "/*")
-            .withColumn("value_str", F.col("value").cast("string"))
-            .select("topic", "ts", "value_str", "event_id")
-        )
-        q = (
-            diffonly_stream(stream, state_ttl_ms=3_600_000)
-            .writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def add_slice(name, rows):
-        _mk_messages(spark, rows).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(input_dir / name))
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    enable_rocksdb_state_store(spark)
-    try:
-        add_slice("000.parquet", [("a", 0, "x", 1), ("b", 1, "p", 2)])
-        run_once()  # query terminates — the "kill" between batches
-
-        # while the query is down: an unchanged repeat for a, a change for b
-        add_slice("001.parquet", [("a", 10, "x", 3), ("b", 11, "q", 4)])
-        run_once()  # restart from the same checkpoint
-
-        got = sorted(
-            (r.topic, r.value_str, r.event_id)
-            for r in spark.read.parquet(str(out_dir)).collect()
-        )
-        # a's repeat (event 3) suppressed by RECOVERED state; b's change kept
-        assert got == [("a", "x", 1), ("b", "p", 2), ("b", "q", 4)]
-    finally:
-        if prev_provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_stateful_diffonly_ttl_expires_idle_topics(spark, tmp_path):
-    """state_ttl_ms bounds the state store: an idle topic's last-value
-    memory is dropped, so its next message re-emits even when unchanged
-    (the documented expiry trade-off)."""
-    import time
-
-    from mqtt2sql_spark.streaming.diffonly import diffonly_stream
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    out_dir = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-
-    def run_once():
-        stream = (
-            message_file_stream(spark, str(input_dir) + "/*")
-            .withColumn("value_str", F.col("value").cast("string"))
-            .select("topic", "ts", "value_str", "event_id")
-        )
-        q = (
-            diffonly_stream(stream, state_ttl_ms=100)
-            .writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def add_slice(name, rows):
-        _mk_messages(spark, rows).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(input_dir / name))
-
-    add_slice("000.parquet", [("a", 0, "x", 1)])
-    run_once()
-    time.sleep(0.5)  # let topic a idle past the 100 ms TTL
-    add_slice("001.parquet", [("b", 10, "p", 2)])
-    run_once()  # processing this batch expires a's state
-    time.sleep(0.5)
-    add_slice("002.parquet", [("a", 20, "x", 3)])
-    run_once()
-
-    got = sorted(
-        (r.topic, r.value_str, r.event_id)
-        for r in spark.read.parquet(str(out_dir)).collect()
-    )
-    # ("a", "x") appears TWICE: the post-expiry repeat is emitted even
-    # though the value never changed
-    assert got == [("a", "x", 1), ("a", "x", 3), ("b", "p", 2)]
 
 
 def test_streaming_hll_register_maintenance(spark, staged, tmp_path):
@@ -438,89 +294,6 @@ def test_ewma_stream_equals_batch(spark, tmp_path):
     assert all(
         f == 0 for t, e, x, f in want if x not in (99.0, -40.0)
     ), flagged
-
-
-# --- transformWithStateInPandas topic registry ------------------------------
-
-
-def test_registry_state_matches_batch(spark, staged, tmp_path):
-    """The ValueState registry (modern transformWithState API) must
-    converge to the batch upsert + count per topic: final update-mode
-    row per topic == (count(*), max_by(value, (ts, event_id))).
-
-    Environment gate: transformWithState's Python state protocol needs
-    google.protobuf, which this container lacks and cannot install (no
-    network egress — `pip download` fails DNS; proof in
-    tests/test_multimodal_codecs.py's module docstring) — skip the
-    RUNTIME integration, don't fake it.  The state-transition logic
-    itself is covered offline by
-    test_registry_processor_contract_offline below."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state protocol requires protobuf",
-    )
-    from mqtt2sql_spark.streaming.diffonly import enable_rocksdb_state_store
-    from mqtt2sql_spark.streaming.pipeline import message_file_stream
-    from mqtt2sql_spark.streaming.registry_state import topic_registry_stream
-
-    # transformWithState requires the RocksDB state-store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    enable_rocksdb_state_store(spark)
-
-    stream = message_file_stream(spark, str(staged) + "/*").withColumn(
-        "value_str", F.col("value").cast("string")
-    )
-    out_dir = tmp_path / "out"
-    q = (
-        topic_registry_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        _drain(q)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-    # last emitted row per topic (update stream appended to files: take
-    # the row with the highest n_messages per topic)
-    got = {}
-    for r in spark.read.parquet(str(out_dir)).collect():
-        cur = got.get(r["topic"])
-        if cur is None or r["n_messages"] > cur[0]:
-            got[r["topic"]] = (
-                r["n_messages"],
-                r["last_value"],
-                r["last_event_id"],
-            )
-
-    all_msgs = (
-        spark.read.schema(MESSAGE_SCHEMA)
-        .parquet(str(staged) + "/*")
-        .withColumn("value_str", F.col("value").cast("string"))
-    )
-    want = {
-        r["topic"]: (r["n"], r["v"], r["e"])
-        for r in all_msgs.groupBy("topic")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(
-                "max_by(value_str, struct(ts, event_id))"
-            ).alias("v"),
-            F.expr(
-                "max_by(event_id, struct(ts, event_id))"
-            ).alias("e"),
-        )
-        .collect()
-    }
-    assert got == want and len(got) == 3
 
 
 def test_hll_sink_stream_matches_batch_registers(spark, tmp_path):
@@ -705,83 +478,6 @@ def test_stream_static_broadcast_enrichment(spark, staged, tmp_path):
     assert got == want
 
 
-def test_registry_processor_contract_offline():
-    """Offline contract for the transformWithState registry logic: the
-    RUNTIME needs google.protobuf (absent here — the integration test
-    above skips), but the state-transition function itself does not.
-    Drive handleInputRows directly with a fake ValueState handle across
-    micro-batches — per-topic state must converge to the batch twin
-    (count(*), max_by(value, (ts, event_id))), including the
-    late-arriving-batch case where the newest batch's tail is OLDER
-    than the current registry row (count bumps, last_* stay put)."""
-    import pandas as pd
-
-    from mqtt2sql_spark.streaming.registry_state import (
-        make_topic_registry_processor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.states.setdefault(name, FakeValueState())
-
-    def batch(rows):
-        return pd.DataFrame(
-            rows, columns=["ts", "event_id", "value_str"]
-        ).assign(ts=lambda d: pd.to_datetime(d["ts"]))
-
-    t = "sensor/a"
-    batches = [
-        # unsorted within the batch: the sort must pick ts=3 as tail
-        batch([("2024-01-01 00:00:03", 30, "v3"),
-               ("2024-01-01 00:00:01", 10, "v1"),
-               ("2024-01-01 00:00:02", 20, "v2")]),
-        # equal-ts tie: higher event_id wins
-        batch([("2024-01-01 00:00:03", 31, "v3b")]),
-        # late data only — older than current state: count bumps,
-        # last_value must NOT regress
-        batch([("2024-01-01 00:00:00", 5, "stale")]),
-    ]
-
-    proc = make_topic_registry_processor()
-    proc.init(FakeHandle())
-    emitted = []
-    for b in batches:
-        emitted.extend(
-            out for out in proc.handleInputRows((t,), [b], None)
-        )
-    proc.close()
-
-    # one update row per micro-batch
-    assert len(emitted) == 3
-    final = emitted[-1].iloc[0]
-    # batch twin: count(*) + max_by(value_str, (ts, event_id))
-    allb = pd.concat(batches, ignore_index=True)
-    tail = allb.sort_values(["ts", "event_id"]).iloc[-1]
-    assert final["topic"] == t
-    assert int(final["n_messages"]) == len(allb) == 5
-    assert final["last_value"] == tail["value_str"] == "v3b"
-    assert int(final["last_event_id"]) == int(tail["event_id"]) == 31
-    assert final["last_ts"] == tail["ts"]
-    # intermediate rows carried the running count
-    assert [int(e.iloc[0]["n_messages"]) for e in emitted] == [3, 4, 5]
-
-
 # --- MqttUpsertSink per-batch contract ---------------------------------------
 
 
@@ -816,7 +512,7 @@ def test_upsert_sink_reads_each_batch_once(spark, tmp_path):
     )
     sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
     q = start_ingest(
-        spark, stream, sink, str(tmp_path / "ckpt"),
+        stream, sink, str(tmp_path / "ckpt"),
         subscribe_patterns=["sensors/#"], exclude_topics=["sensors/skip"],
     )
     _drain(q)
