@@ -187,6 +187,7 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     log.info("starting query (transport=%s, once=%s)", args.transport, args.once)
+    install_graceful_shutdown(spark)
     query = start_ingest(
         reader.load(),
         MqttUpsertSink(spark, args.storage_dir),
@@ -195,7 +196,6 @@ def main(argv: list[str] | None = None) -> int:
         exclude_topics=args.exclude_topic or None,
         once=args.once,
     )
-    install_graceful_shutdown(spark)
     query.awaitTermination()
     return 0
 

@@ -49,39 +49,3 @@ def salted_count_sum(
         *[F.sum(f"_s_{c}").alias(f"sum_{c}") for c in sum_cols],
     )
 
-
-def salted_replicated_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-safe equi-join for a dim too big to broadcast.
-
-    A shuffle join on a hot key sends every hot-key fact row to ONE
-    reducer.  Salting spreads them: each fact row gets a deterministic
-    salt in [0, salt_buckets), the dim side replicates every row across
-    all buckets (dim cost × salt_buckets — acceptable when the dim is
-    mid-sized: too big for broadcast, small beside the fact), and the
-    join runs on (key, salt) so the hot key's rows land on
-    `salt_buckets` reducers instead of one.
-
-    The salt value itself never affects the OUTPUT (every dim row
-    exists in every bucket), so results are bit-identical to the plain
-    join under any row placement — asserted in tests.  AQE's skew-join
-    split is the automatic alternative for sort-merge joins; this is
-    the explicit form that also covers aggregate-after-join pipelines
-    where AQE's split boundary is not available.
-    """
-    salt = F.pmod(
-        F.crc32(F.col(key).cast("string")) + F.monotonically_increasing_id(),
-        F.lit(salt_buckets),
-    ).cast("int")
-    fact_s = fact.withColumn("_salt", salt)
-    dim_s = dim.select(
-        "*",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias(
-            "_salt"
-        ),
-    )
-    return fact_s.join(dim_s, [key, "_salt"]).drop("_salt")

@@ -1216,7 +1216,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "degrades to brute force within it; at 100 TB this statistic is "
     "what triggers re-clustering, exactly like shuffle-key skew stats "
     "(topic_key_skew_stats) trigger salting.  Same deterministic "
-    "assignment as ann_ivf_topk / operators/annindex.py.",
+    "assignment as ann_ivf_topk.",
 )
 def ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)

@@ -129,7 +129,7 @@ class FileSpoolTransport:
             if len(out) >= max_n:
                 break
             # '.'-prefixed = hidden/in-progress; '_'-prefixed = metadata
-            # (_manifest, _SUCCESS — the spool SINK's commit log)
+            # (_manifest, _SUCCESS: commit markers a spool writer may leave)
             if name in self._done or name.startswith((".", "_")):
                 continue
             path = os.path.join(self.spool_dir, name)

@@ -72,14 +72,19 @@ def start_ingest(
     once: bool = False,
 ) -> StreamingQuery:
     """Filter the message stream and start the upsert sink on it.  With
-    `once`, the query drains what is available and stops (the daemon's
-    --once catch-up mode) instead of running until stopped."""
+    `once`, the query drains what is available, one maxPerTrigger batch
+    after another, and is returned stopped (the daemon's --once catch-up
+    mode) instead of running until stopped."""
     filtered = apply_filters(stream, subscribe_patterns, exclude_topics)
-    writer = (
+    query = (
         filtered.writeStream.foreachBatch(sink.process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .start()
     )
     if once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        # Python data sources do not support Trigger.AvailableNow (Spark
+        # falls back to a single batch), so drain explicitly.
+        query.processAllAvailable()
+        query.stop()
+    return query

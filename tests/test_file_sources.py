@@ -1,91 +1,4 @@
-"""JSONL/CSV batch sources: schema-pinned reads, sharded writes,
-roundtrip equality with the parquet fixtures."""
-
-from pyspark.sql import functions as F
-
-from mqtt2sql_spark.fixtures import load_table
-from mqtt2sql_spark.sources.files import (
-    read_documents_jsonl,
-    read_events_csv,
-    write_documents_jsonl,
-    write_events_csv,
-)
-from tests.conftest import SF_DIR
-
-
-def _sorted_rows(df, key):
-    return [tuple(r) for r in df.orderBy(key).collect()]
-
-
-def test_documents_jsonl_roundtrip(spark, tmp_path):
-    docs = load_table(spark, SF_DIR, "documents")
-    out = str(tmp_path / "docs_jsonl")
-    write_documents_jsonl(docs, out, shards=4)
-    # Spark disallows selecting ONLY _corrupt_record from raw files —
-    # cache the parsed result first (the documented pattern)
-    back = read_documents_jsonl(spark, out).cache()
-    assert back.filter(F.col("_corrupt_record").isNotNull()).count() == 0
-    got = _sorted_rows(back.drop("_corrupt_record"), "doc_id")
-    want = _sorted_rows(docs.select(*back.drop("_corrupt_record").columns), "doc_id")
-    assert got == want
-    import glob
-
-    parts = glob.glob(out + "/part-*")
-    assert len(parts) == 4  # sharded output
-
-
-def test_documents_jsonl_corrupt_lines_are_quarantined(spark, tmp_path):
-    d = tmp_path / "drop"
-    d.mkdir()
-    (d / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "ok", "lang": "en", "source": "s", "n_chars": 2}\n'
-        "THIS IS NOT JSON\n"
-        '{"doc_id": 2, "text": "ok2", "lang": "en", "source": "s", "n_chars": 3}\n'
-    )
-    back = read_documents_jsonl(spark, str(d)).cache()
-    assert back.count() == 3
-    assert back.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-    assert back.filter(F.col("doc_id").isNotNull()).count() == 2
-
-
-def test_events_csv_roundtrip(spark, tmp_path):
-    ev = load_table(spark, SF_DIR, "events")
-    out = str(tmp_path / "events_csv")
-    write_events_csv(ev, out, shards=2)
-    back = read_events_csv(spark, out)
-    assert back.count() == ev.count()
-    # props JSON (with quotes/commas) survives CSV quoting
-    a = {r.event_id: r.props for r in back.collect()}
-    b = {r.event_id: r.props for r in ev.collect()}
-    assert a == b
-    # timestamps keep microsecond precision
-    ta = {r.event_id: r.ts for r in back.limit(0).union(back).collect()}
-    tb = {r.event_id: r.ts for r in ev.collect()}
-    assert ta == tb
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from mqtt2sql_spark.sources.files import (
-        DOCUMENTS_SCHEMA,
-        read_table_orc,
-        write_table_orc,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    out = str(tmp_path / "docs_orc")
-    write_table_orc(docs, out, shards=3)
-    back = read_table_orc(spark, out, DOCUMENTS_SCHEMA)
-    assert _sorted_rows(back, "doc_id") == _sorted_rows(docs, "doc_id")
-    # predicate reaches the ORC scan (stripe pruning at scale)
-    plan = (
-        back.filter(F.col("doc_id") == 7)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,7)]" in plan
+"""Parquet ingest directories: schema drift across drops."""
 
 
 def test_parquet_schema_evolution_merges_new_column(spark, tmp_path):

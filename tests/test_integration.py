@@ -4,8 +4,6 @@ The complete reference pipeline shape (SURVEY.md §3.1) in one streaming
 query: subscribe → exclude → project → keyed upsert + diff-only history.
 """
 
-import sqlite3
-
 
 def test_mqtt_to_tables_end_to_end(spark, tmp_path):
     from pyspark.sql import functions as F
@@ -55,38 +53,6 @@ def test_mqtt_to_tables_end_to_end(spark, tmp_path):
         [(1, b"21.5"), (1, b"22.0"), (2, b"18.0")]
     ) or sorted(hist) == sorted([(2, b"21.5"), (2, b"22.0"), (1, b"18.0")])
     assert len(hist) == 3
-
-
-def test_sqlite_sink_from_stream(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from mqtt2sql_spark.sinks.jdbc import SqliteUpsertSink
-    from mqtt2sql_spark.sources.mqtt import MqttDataSource
-
-    spark.dataSource.register(MqttDataSource)
-    spool = tmp_path / "spool"
-    spool.mkdir()
-    (spool / "000.msg").write_text(
-        f"home/t\t{b'1'.hex()}\t0\t0\nhome/t\t{b'2'.hex()}\t0\t0\n"
-    )
-    stream = (
-        spark.readStream.format("mqtt")
-        .option("transport", "file")
-        .option("spoolDir", str(spool))
-        .load()
-    )
-    db = str(tmp_path / "mqtt.db")
-    sink = SqliteUpsertSink(db)
-    q = (
-        stream.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    with sqlite3.connect(db) as con:
-        rows = con.execute("SELECT topic, value FROM mqtt").fetchall()
-    assert rows == [("home/t", b"2")]
 
 
 def test_sql_surface_history_view(spark):
@@ -264,7 +230,8 @@ once
 
 def test_cli_daemon_once_drains_spool(tmp_path):
     """`python -m mqtt2sql_spark --once` end-to-end: spool → mqtt table
-    (the reference's daemon surface, batch-catchup mode)."""
+    (the reference's daemon surface, batch-catchup mode).  --once drains
+    the whole spool, not just one maxPerTrigger batch."""
     import subprocess
     import sys
     from pathlib import Path
@@ -288,6 +255,7 @@ def test_cli_daemon_once_drains_spool(tmp_path):
             "--storage-dir", str(tmp_path / "tables"),
             "--checkpoint-dir", str(tmp_path / "ckpt"),
             "--exclude-topic", "debug/x",
+            "--max-per-trigger", "2",
             "--once",
         ],
         cwd=repo,
@@ -306,17 +274,16 @@ def test_cli_daemon_once_drains_spool(tmp_path):
         "SELECT topic, decode(value) FROM "
         f"'{tmp_path}/tables/mqtt/{ptr}/*.parquet' ORDER BY topic"
     ).fetchall()
-    topics = [r[0] for r in rows]
-    assert topics == ["sensors/1", "sensors/2"]  # excluded topic absent
-    assert rows[0][1] == '{"t": 2}'  # latest value won the upsert
+    # two batches of two: the drain reaches past the first batch, the
+    # latest value wins the upsert and the excluded topic is absent
+    assert rows == [("sensors/1", '{"t": 2}'), ("sensors/2", '{"h": 9}')]
 
 
 def test_pipeline_capstone_filters_diffonly_spool_compact(spark, tmp_path):
     """End-to-end on the daemon's path: file stream -> start_ingest
     (subscription filter) -> MqttUpsertSink.  History must hold the batch
     semantics across micro-batches (diff-only run-length encoding per
-    topic) and the unsubscribed topic must reach neither table.  Spool
-    commit and compaction are covered by tests/test_spool_sink.py."""
+    topic) and the unsubscribed topic must reach neither table."""
     import datetime as dt
 
     from mqtt2sql_spark.sinks.upsert import MqttUpsertSink

@@ -133,14 +133,21 @@ def test_file_spool_transport_tolerates_missing_dir(tmp_path):
 def test_file_spool_transport_resumes_inside_a_file(tmp_path):
     """A poll that stops inside a file resumes there on the next poll:
     repeated polls deliver every message of a file larger than max_n,
-    then the next file's, in order, with no duplicates."""
+    then the next file's, in order, with no duplicates.  qos and retain
+    are carried through, and metadata entries ('_'-prefixed files,
+    '.'-prefixed directories) are never read as messages."""
     from mqtt2sql_spark.sources.mqtt import FileSpoolTransport
 
-    def lines(ids):
-        return "".join(f"t/{i}\t{str(i).encode().hex()}\t0\t0\n" for i in ids)
+    def lines(ids, flags=0):
+        return "".join(
+            f"t/{i}\t{str(i).encode().hex()}\t{flags}\t{flags}\n" for i in ids
+        )
 
     (tmp_path / "000.msg").write_text(lines(range(120)))
-    (tmp_path / "001.msg").write_text(lines(range(120, 150)))
+    (tmp_path / "001.msg").write_text(lines(range(120, 150), flags=1))
+    (tmp_path / "_manifest").write_text(lines(["manifest"]))
+    (tmp_path / ".inprogress").mkdir()
+    (tmp_path / ".inprogress" / "002.msg").write_text(lines(["inprogress"]))
     t = FileSpoolTransport(str(tmp_path))
     got, sizes = [], []
     for _ in range(4):
@@ -148,4 +155,7 @@ def test_file_spool_transport_resumes_inside_a_file(tmp_path):
         sizes.append(len(batch))
         got.extend(batch)
     assert sizes == [50, 50, 50, 0]
-    assert got == [(f"t/{i}", str(i).encode(), 0, 0) for i in range(150)]
+    assert got == [
+        (f"t/{i}", str(i).encode(), int(i >= 120), int(i >= 120))
+        for i in range(150)
+    ]

@@ -9,6 +9,7 @@ refactor can't silently reopen it.
 
 from __future__ import annotations
 
+import ast
 import json
 import re
 import sys
@@ -230,3 +231,64 @@ def test_missing_plan_module_fails_loudly(monkeypatch):
     )
     with pytest.raises(ModuleNotFoundError, match="no_such_module"):
         registry._load()
+
+
+# --- reachability: no library module that nothing runs ------------------------
+
+_ENTRY_POINTS = (
+    "mqtt2sql_spark/__main__.py",
+    "mqtt2sql_spark/registry.py",
+    "__spark_entry__.py",
+    "bench.py",
+    "perfbench/*.py",
+    "tools/*.py",
+)
+
+
+def _module_file(name: str) -> Path | None:
+    base = REPO.joinpath(*name.split("."))
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def _imported_modules(path: Path) -> set[str]:
+    """Every module name `path` imports absolutely (at any depth,
+    including imports inside functions), plus the registry's
+    `_PLAN_MODULES` strings."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    names: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+        elif (
+            isinstance(node, ast.Assign)
+            and any(getattr(t, "id", None) == "_PLAN_MODULES" for t in node.targets)
+        ):
+            names.update(ast.literal_eval(node.value))
+    return names
+
+
+def test_every_library_module_is_reachable_from_an_entry_point():
+    """Each mqtt2sql_spark module must be imported, directly or not, by
+    the daemon, the query registry, the driver contract, bench.py,
+    perfbench/ or tools/.  A module only tests import is dead code: it
+    goes, and git history keeps it for the change that wires it in."""
+    todo = [p for pat in _ENTRY_POINTS for p in sorted(REPO.glob(pat))]
+    seen = set(todo)
+    while todo:
+        for name in _imported_modules(todo.pop()):
+            path = _module_file(name) if name.startswith("mqtt2sql_spark") else None
+            if path is not None and path not in seen:
+                seen.add(path)
+                todo.append(path)
+    unreached = sorted(
+        str(p.relative_to(REPO))
+        for p in (REPO / "mqtt2sql_spark").rglob("*.py")
+        if p.name != "__init__.py" and p not in seen
+    )
+    assert unreached == [], f"modules no entry point imports: {unreached}"

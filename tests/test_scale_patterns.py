@@ -119,39 +119,6 @@ def test_hll_is_two_hash_aggregates(spark):
     assert plan.count("HashAggregate") >= 4  # partial+final × register/total
 
 
-def test_bucketed_join_runs_without_shuffle(spark, tmp_path):
-    """Both sides bucketed on the join key with the same bucket count →
-    the equi-join must plan with NO Exchange (the 100 TB co-location
-    path: shuffle once at ingest, never per query)."""
-    from mqtt2sql_spark.fixtures import load_table
-    from mqtt2sql_spark.sinks.bucketed import read_bucketed, write_bucketed
-    from tests.conftest import SF_DIR
-
-    orders = load_table(spark, SF_DIR, "orders")
-    customer = load_table(spark, SF_DIR, "customer")
-    write_bucketed(orders, "b_orders", str(tmp_path / "bo"), "o_custkey", 8)
-    write_bucketed(
-        customer, "b_customer", str(tmp_path / "bc"), "c_custkey", 8
-    )
-    try:
-        bo = read_bucketed(spark, "b_orders")
-        bc = read_bucketed(spark, "b_customer")
-        joined = bo.hint("merge").join(
-            bc, bo["o_custkey"] == bc["c_custkey"]
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: no shuffle either side
-        # and the result is still the plain join's result
-        expect = orders.join(
-            customer, orders["o_custkey"] == customer["c_custkey"]
-        ).count()
-        assert joined.count() == expect
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
 # --- Bloom runtime-filter pruning ------------------------------------------
 
 
@@ -196,30 +163,6 @@ def test_bloom_bitmap_is_broadcast_small(spark):
     keys = load_table(spark, SF_DIR, "orders").select("o_orderkey")
     row = build_bloom(keys, "o_orderkey").collect()[0]
     assert len(row["bloom"]) <= 1024  # <= 1024 words = 8 KB
-
-
-def test_salted_replicated_join_equals_plain_join(spark):
-    """Hot-key fact x mid-size dim: the salted (key, salt) join must be
-    row-identical to the plain join; the salt only spreads reducers."""
-    import pyspark.sql.functions as F
-
-    from mqtt2sql_spark.operators.skew import salted_replicated_join
-
-    fact = spark.createDataFrame(
-        [("hot", i) for i in range(500)]
-        + [("k%d" % (i % 20), i) for i in range(200)],
-        "key string, v long",
-    ).repartition(8)
-    dim = spark.createDataFrame(
-        [("hot", "H")] + [("k%d" % i, "D%d" % i) for i in range(20)],
-        "key string, attr string",
-    )
-    # dim NOT broadcast: force the shuffle-join regime being protected
-    plain = fact.join(dim.hint("shuffle_hash"), "key")
-    salted = salted_replicated_join(fact, dim, "key", salt_buckets=8)
-    a = sorted((r["key"], r["v"], r["attr"]) for r in plain.collect())
-    b = sorted((r["key"], r["v"], r["attr"]) for r in salted.collect())
-    assert a == b and len(a) == 700
 
 
 def test_skyline_local_phase_has_no_shuffle(spark):

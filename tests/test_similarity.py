@@ -143,74 +143,6 @@ def test_semantic_dedup_drops_parallel_vector_keeps_lower_id(spark, tmp_path):
     assert out[2 * KM_K] == 1   # orthogonal → kept
 
 
-# --- persisted IVF index lifecycle -----------------------------------------
-
-
-def test_persisted_ivf_index_matches_fresh_path(spark, tmp_path):
-    """build -> store -> query must return bit-identical rows to the
-    in-plan ann_ivf_topk, and the postings scan must statically prune
-    to the probed cells."""
-    import pyspark.sql.functions as F
-
-    from mqtt2sql_spark.operators.annindex import (
-        build_ivf_index,
-        query_ivf_index,
-    )
-    from mqtt2sql_spark.plans.similarity import (
-        CELL_MOD,
-        N_PROBE,
-        QUERY_MOD,
-        TOP_K,
-        _emb,
-        ann_ivf_topk,
-    )
-    from tests.conftest import SF_DIR
-
-    emb = _emb(spark, SF_DIR)
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, cell_mod=CELL_MOD)
-
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    served = query_ivf_index(
-        spark, idx, queries, n_probe=N_PROBE, top_k=TOP_K
-    )
-    fresh = ann_ivf_topk(spark, SF_DIR)
-    got = {tuple(r) for r in served.collect()}
-    want = {tuple(r) for r in fresh.collect()}
-    assert got == want and len(got) > 0
-
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cell" in plan, plan[:2000]
-
-
-def test_ivf_index_partition_layout(spark, tmp_path):
-    """Postings are laid out one directory per cell — the unit of
-    file skipping."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from mqtt2sql_spark.operators.annindex import build_ivf_index
-    from mqtt2sql_spark.plans.similarity import CELL_MOD, _emb
-    from tests.conftest import SF_DIR
-
-    emb = _emb(spark, SF_DIR)
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, cell_mod=CELL_MOD)
-    cells = [
-        d for d in os.listdir(os.path.join(idx, "postings"))
-        if d.startswith("cell=")
-    ]
-    n_cent = emb.filter(F.col("vec_id") % CELL_MOD == 1).count()
-    assert 0 < len(cells) <= n_cent
-    # every corpus vector is in exactly one cell
-    post = spark.read.parquet(f"{idx}/postings")
-    assert post.count() == emb.count()
-    assert post.select("vec_id").distinct().count() == emb.count()
-
-
 def test_ndcg_bounds_and_perfect_ranking_sanity(spark):
     """nDCG is in (0, 1e6]; a query whose LSH list matches the exact
     top-k in order must score exactly 1e6 ppm."""

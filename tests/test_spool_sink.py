@@ -1,263 +1,59 @@
-"""Spool-directory streaming sink: commit protocol + exactly-once manifest."""
+"""Spool loopback: the MQTT source's output re-spooled in the format the
+file-spool transport reads."""
 
-import json
 import os
-
-import pytest
-
-
-def _read_manifest(path):
-    try:
-        with open(os.path.join(path, "_manifest")) as f:
-            return [json.loads(line) for line in f if line.strip()]
-    except FileNotFoundError:
-        return []
-
-
-def test_spool_sink_writes_manifested_jsonl(spark, tmp_path):
-    from mqtt2sql_spark.sinks.spool import register_spool_sink
-
-    register_spool_sink(spark)
-    src = tmp_path / "in"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, v string"
-    ).coalesce(1).write.mode("overwrite").parquet(str(src / "s0.parquet"))
-
-    out = str(tmp_path / "spool")
-    q = (
-        spark.readStream.schema("id long, v string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-        .writeStream.format("spool")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    manifest = _read_manifest(out)
-    assert manifest, "manifest must record committed epochs"
-    assert sum(e["rows"] for e in manifest) == 3
-    rows = []
-    for e in manifest:
-        for fn in e["files"]:
-            with open(os.path.join(out, fn)) as f:
-                rows += [json.loads(line) for line in f]
-    assert sorted(r["id"] for r in rows) == [1, 2, 3]
-    # nothing left in-progress after a clean drain
-    assert os.listdir(os.path.join(out, ".inprogress")) == []
-
-
-def test_spool_commit_is_idempotent_on_epoch_replay(tmp_path):
-    """Structured Streaming is at-least-once to the sink: a replayed
-    commit(epoch) must not double-publish files or manifest entries."""
-    from mqtt2sql_spark.sinks.spool import SpoolCommitMessage, SpoolStreamWriter
-
-    out = str(tmp_path / "spool")
-    w = SpoolStreamWriter({"path": out})
-
-    def fake_temp(name, n):
-        p = os.path.join(out, ".inprogress", name)
-        with open(p, "w") as f:
-            for i in range(n):
-                f.write(json.dumps({"i": i}) + "\n")
-        return SpoolCommitMessage(temp_name=name, rows=n)
-
-    m1 = fake_temp("7-aaaa.jsonl", 2)
-    w.commit([m1], 7)
-    first = _read_manifest(out)
-    assert len(first) == 1 and first[0]["epoch"] == 7
-
-    # replay: a retried attempt produced a NEW temp file for the same epoch
-    m2 = fake_temp("7-bbbb.jsonl", 2)
-    w.commit([m2], 7)
-    again = _read_manifest(out)
-    assert again == first  # no duplicate manifest entry
-    # the duplicate attempt's temp file was discarded, not published
-    assert os.listdir(os.path.join(out, ".inprogress")) == []
-    published = [f for f in os.listdir(out) if f.startswith("part-")]
-    assert len(published) == 1
-
-
-def test_spool_abort_cleans_temp_files(tmp_path):
-    from mqtt2sql_spark.sinks.spool import SpoolCommitMessage, SpoolStreamWriter
-
-    out = str(tmp_path / "spool")
-    w = SpoolStreamWriter({"path": out})
-    p = os.path.join(out, ".inprogress", "3-cccc.jsonl")
-    with open(p, "w") as f:
-        f.write("{}\n")
-    w.abort([SpoolCommitMessage(temp_name="3-cccc.jsonl", rows=1), None], 3)
-    assert os.listdir(os.path.join(out, ".inprogress")) == []
-
-
-def test_spool_requires_path():
-    from mqtt2sql_spark.sinks.spool import SpoolStreamWriter
-
-    with pytest.raises(ValueError):
-        SpoolStreamWriter({})
-
-
-def test_spool_roundtrips_into_file_spool_transport(spark, tmp_path):
-    """format='mqtt-spool' output is drainable by the source-side
-    FileSpoolTransport (writer/reader symmetry): a stream written by the
-    sink comes back as (topic, payload, qos, retain) messages, with the
-    manifest skipped as metadata."""
-    from pyspark import Row
-
-    from mqtt2sql_spark.sinks.spool import SpoolStreamWriter
-    from mqtt2sql_spark.sources.mqtt import FileSpoolTransport
-
-    out = str(tmp_path / "spool")
-    w = SpoolStreamWriter({"path": out, "format": "mqtt-spool"})
-    rows = [
-        Row(topic="tele/x", value=b"42", qos=0, retain=0),
-        Row(topic="tele/y", value="7.5", qos=1, retain=0),
-    ]
-    # emulate the executor-side write without a TaskContext
-    name = "0-dddd.jsonl"
-    with open(os.path.join(out, ".inprogress", name), "w") as f:
-        for r in rows:
-            f.write(w._encode(r) + "\n")
-    from mqtt2sql_spark.sinks.spool import SpoolCommitMessage
-
-    w.commit([SpoolCommitMessage(temp_name=name, rows=2)], 0)
-
-    t = FileSpoolTransport(out)
-    t.connect()
-    msgs = t.poll(10)
-    assert ("tele/x", b"42", 0, 0) in msgs
-    assert ("tele/y", b"7.5", 1, 0) in msgs
 
 
 def test_mqtt_source_to_spool_sink_loopback(spark, tmp_path):
-    """Full custom-DataSource chain: the MQTT source (file-spool
-    transport) streams into the spool SINK in mqtt-spool format, and the
-    sink's output is byte-identical spool lines a second FileSpoolTransport
-    can drain — a complete bridge hop (ingest → Spark → re-spool) through
-    both Python DataSources with the exactly-once manifest in between."""
-    from mqtt2sql_spark.sinks.spool import register_spool_sink
+    """The MQTT source (file-spool transport) streams through Spark into
+    a per-epoch spool writer (temp file under '.inprogress/', renamed on
+    commit, one '_manifest' line per epoch), and a second
+    FileSpoolTransport drains exactly the source's messages back from it:
+    one bridge hop (ingest → Spark → re-spool) with qos and retain kept
+    and the writer's metadata never read as messages."""
     from mqtt2sql_spark.sources.mqtt import FileSpoolTransport, MqttDataSource
 
     spark.dataSource.register(MqttDataSource)
-    register_spool_sink(spark)
 
     src_spool = tmp_path / "in"
     src_spool.mkdir()
     (src_spool / "000.msg").write_text(
         f"tele/a\t{b'1'.hex()}\t0\t0\n" f"tele/b\t{b'2'.hex()}\t1\t1\n"
     )
-    out = str(tmp_path / "out")
+    out = tmp_path / "out"
+    (out / ".inprogress").mkdir(parents=True)
+
+    def respool(batch, epoch):
+        rows = batch.collect()
+        if not rows:
+            return
+        name = f"{epoch:06d}.msg"
+        tmp = out / ".inprogress" / name
+        tmp.write_text(
+            "".join(
+                f"{r.topic}\t{bytes(r.value).hex()}\t{r.qos}\t{r.retain}\n"
+                for r in rows
+            )
+        )
+        os.replace(tmp, out / name)
+        with open(out / "_manifest", "a") as f:
+            f.write(f"{epoch}\t{name}\t{len(rows)}\n")
+
     q = (
         spark.readStream.format("mqtt")
         .option("transport", "file")
         .option("spoolDir", str(src_spool))
         .load()
-        .writeStream.format("spool")
-        .option("path", out)
-        .option("format", "mqtt-spool")
+        .writeStream.foreachBatch(respool)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.processAllAvailable()
     q.stop()
 
-    t = FileSpoolTransport(out)
+    t = FileSpoolTransport(str(out))
     t.connect()
-    msgs = set(t.poll(10))
-    assert ("tele/a", b"1", 0, 0) in msgs
-    assert ("tele/b", b"2", 1, 1) in msgs
-    manifest = _read_manifest(out)
-    assert sum(e["rows"] for e in manifest) == 2
-
-
-# --- compaction -------------------------------------------------------------
-
-
-def _read_all_rows(path):
-    rows = []
-    for e in _read_manifest(path):
-        for fname in e["files"]:
-            with open(os.path.join(path, fname)) as f:
-                rows.extend(
-                    json.loads(line) for line in f if line.strip()
-                )
-    return rows
-
-
-def _spool_dir_with_epochs(tmp_path, n_epochs=6, rows_per=4):
-    """Hand-build a committed spool dir: one small file per epoch."""
-    out = tmp_path / "spool"
-    out.mkdir()
-    manifest = []
-    for ep in range(n_epochs):
-        fname = f"part-{ep:05d}-0000.jsonl"
-        with open(out / fname, "w") as f:
-            for i in range(rows_per):
-                f.write(json.dumps({"epoch": ep, "i": i}) + "\n")
-        manifest.append(
-            {"epoch": ep, "files": [fname], "rows": rows_per}
-        )
-    with open(out / "_manifest", "w") as f:
-        for e in manifest:
-            f.write(json.dumps(e) + "\n")
-    return str(out)
-
-
-def test_compaction_preserves_rows_and_reduces_files(tmp_path):
-    from mqtt2sql_spark.sinks.compact import compact_spool
-
-    path = _spool_dir_with_epochs(tmp_path)
-    before = _read_all_rows(path)
-    stats = compact_spool(path, target_bytes=200)  # a few files per bin
-    after = _read_all_rows(path)
-    assert sorted(map(json.dumps, after)) == sorted(map(json.dumps, before))
-    assert stats["files_after"] < stats["files_before"] == 6
-    assert stats["compacted"] > 0
-    # no stray uncommitted files besides the manifest + committed set
-    committed = {
-        f for e in _read_manifest(path) for f in e["files"]
-    }
-    on_disk = {
-        f for f in os.listdir(path)
-        if f not in ("_manifest", ".inprogress")
-    }
-    assert on_disk == committed
-
-
-def test_compaction_is_idempotent_and_epoch_preserving(tmp_path):
-    from mqtt2sql_spark.sinks.compact import compact_spool
-
-    path = _spool_dir_with_epochs(tmp_path)
-    compact_spool(path, target_bytes=200)
-    epochs = set()
-    for e in _read_manifest(path):
-        epochs.update(e.get("epochs", [e.get("epoch")]))
-    assert epochs == set(range(6))
-    # second pass with the same target: everything already >= bin size
-    stats2 = compact_spool(path, target_bytes=200)
-    assert stats2["compacted"] == 0
-
-
-def test_replay_detection_survives_compaction(tmp_path):
-    """SpoolStreamWriter.commit on an epoch absorbed by compaction must
-    treat it as already-committed (drop temps, no manifest append)."""
-    from mqtt2sql_spark.sinks.compact import compact_spool
-    from mqtt2sql_spark.sinks.spool import (
-        SpoolCommitMessage,
-        SpoolStreamWriter,
-    )
-
-    path = _spool_dir_with_epochs(tmp_path)
-    compact_spool(path, target_bytes=200)
-    w = SpoolStreamWriter({"path": path})
-    # a replayed attempt for epoch 3 (already inside a compacted entry)
-    temp = "replay-tmp.jsonl"
-    with open(os.path.join(path, ".inprogress", temp), "w") as f:
-        f.write(json.dumps({"dup": True}) + "\n")
-    n_entries = len(_read_manifest(path))
-    w.commit([SpoolCommitMessage(temp_name=temp, rows=1)], batchId=3)
-    assert len(_read_manifest(path)) == n_entries  # no new entry
-    assert not os.path.exists(os.path.join(path, ".inprogress", temp))
+    msgs = t.poll(10)
+    assert sorted(msgs) == [("tele/a", b"1", 0, 0), ("tele/b", b"2", 1, 1)]
+    manifest = (out / "_manifest").read_text().splitlines()
+    assert sum(int(ln.split("\t")[2]) for ln in manifest) == 2

@@ -210,236 +210,6 @@ def test_streaming_hll_register_maintenance(spark, staged, tmp_path):
     assert got == want and len(got) > 0
 
 
-# --- EWMA anomaly detector: batch/stream parity -----------------------------
-
-
-def _numeric_slices():
-    """Per-topic numeric series with a planted outlier per topic."""
-    import itertools
-
-    series = {
-        "sensor/a": [10.0, 10.5, 9.8, 10.2, 10.1, 10.3, 99.0, 10.0, 10.2],
-        "sensor/b": [5.0, 5.1, 4.9, 5.0, 5.2, 5.1, 5.0, -40.0, 5.1],
-    }
-    rows = []
-    eid = itertools.count(1)
-    for topic, xs in series.items():
-        for i, x in enumerate(xs):
-            rows.append((topic, i * 60, x, next(eid)))
-    rows.sort(key=lambda r: (r[1], r[3]))
-    # three time-ordered slices
-    third = (len(rows) + 2) // 3
-    return [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-
-
-def _mk_numeric(spark, rows):
-    return spark.createDataFrame(
-        [
-            (_BASE + dt.timedelta(seconds=sec), t, x, e)
-            for t, sec, x, e in rows
-        ],
-        "ts timestamp, topic string, x double, event_id long",
-    )
-
-
-def test_ewma_stream_equals_batch(spark, tmp_path):
-    from mqtt2sql_spark.streaming.ewma import (
-        ewma_anomalies_batch,
-        ewma_anomalies_stream,
-    )
-
-    slices = _numeric_slices()
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    for i, rows in enumerate(slices):
-        _mk_numeric(spark, rows).coalesce(1).write.mode("overwrite").parquet(
-            str(input_dir / f"s{i}.parquet")
-        )
-
-    stream = (
-        spark.readStream.schema(
-            "ts timestamp, topic string, x double, event_id long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(input_dir) + "/*")
-    )
-    out_dir = tmp_path / "out"
-    q = (
-        ewma_anomalies_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    _drain(q)
-
-    got = {
-        (r["topic"], r["event_id"], r["x"], r["is_anomaly"])
-        for r in spark.read.parquet(str(out_dir)).collect()
-    }
-    all_rows = _mk_numeric(spark, [r for s in slices for r in s])
-    want = {
-        (r["topic"], r["event_id"], r["x"], r["is_anomaly"])
-        for r in ewma_anomalies_batch(all_rows).collect()
-    }
-    assert got == want
-    # the planted outliers are flagged, early warmup points are not
-    flagged = {(t, e) for t, e, _x, f in want if f == 1}
-    by_topic = {}
-    for t, e, x, f in want:
-        by_topic.setdefault(t, []).append((e, x, f))
-    assert any(x == 99.0 and f == 1 for _e, x, f in by_topic["sensor/a"])
-    assert any(x == -40.0 and f == 1 for _e, x, f in by_topic["sensor/b"])
-    assert all(
-        f == 0 for t, e, x, f in want if x not in (99.0, -40.0)
-    ), flagged
-
-
-def test_hll_sink_stream_matches_batch_registers(spark, tmp_path):
-    """foreachBatch HLL register maintenance: after streaming N
-    micro-batches, the state table must equal hll_registers() over the
-    union — the mergeability contract, plus replay idempotence."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from mqtt2sql_spark.plans.sketches import hll_registers
-    from mqtt2sql_spark.streaming.hll_sink import HllRegisterSink
-    from mqtt2sql_spark.streaming.pipeline import (
-        MESSAGE_SCHEMA,
-        message_file_stream,
-    )
-
-    d0 = dt.datetime(2024, 1, 1)
-    batches = [
-        [(d0, f"t/{i % 3}", b"x", 0, 0, i) for i in range(40)],
-        [(d0, f"t/{i % 5}", b"x", 0, 0, 1000 + i) for i in range(60)],
-    ]
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    import os
-    import time
-
-    now = time.time()
-    for n, rows in enumerate(batches):
-        p = str(input_dir / f"{n:03d}.parquet")
-        spark.createDataFrame(rows, MESSAGE_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p)
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f), (now - 60 + n, now - 60 + n))
-        os.utime(p, (now - 60 + n, now - 60 + n))
-
-    sink = HllRegisterSink(
-        str(tmp_path / "state"), group_col="topic", key_col="event_id"
-    )
-    stream = message_file_stream(spark, str(input_dir) + "/*")
-    q = (
-        stream.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    all_rows = spark.createDataFrame(
-        [r for b in batches for r in b], MESSAGE_SCHEMA
-    )
-    want = {
-        (r.grp, r.bucket, r.rho)
-        for r in hll_registers(all_rows, "topic", "event_id").collect()
-    }
-    got = {
-        (r.grp, r.bucket, r.rho) for r in sink.registers(spark).collect()
-    }
-    assert got == want and got
-
-    # replaying a batch must not change the state (idempotent max-merge)
-    sink.process_batch(
-        spark.createDataFrame(batches[0], MESSAGE_SCHEMA), epoch_id=99
-    )
-    again = {
-        (r.grp, r.bucket, r.rho) for r in sink.registers(spark).collect()
-    }
-    assert again == want
-
-
-def test_cms_sink_exactly_once_under_replay(spark, tmp_path):
-    """Additive CMS state + epoch ledger: streamed batches sum to the
-    batch sketch of the union; replaying an epoch changes nothing."""
-    import datetime as dt
-
-    from mqtt2sql_spark.streaming.cms_sink import CountMinSink, cms_cells
-    from mqtt2sql_spark.streaming.pipeline import (
-        MESSAGE_SCHEMA,
-        message_file_stream,
-    )
-
-    d0 = dt.datetime(2024, 1, 1)
-    batches = [
-        [(d0, f"t/{i % 4}", b"x", 0, 0, i) for i in range(30)],
-        [(d0, f"t/{i % 7}", b"x", 0, 0, 500 + i) for i in range(50)],
-    ]
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    import os
-    import time
-
-    now = time.time()
-    for n, rows in enumerate(batches):
-        p = str(input_dir / f"{n:03d}.parquet")
-        spark.createDataFrame(rows, MESSAGE_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p)
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f), (now - 60 + n, now - 60 + n))
-        os.utime(p, (now - 60 + n, now - 60 + n))
-
-    sink = CountMinSink(str(tmp_path / "state"), key_col="topic")
-    stream = message_file_stream(spark, str(input_dir) + "/*")
-    q = (
-        stream.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    all_rows = spark.createDataFrame(
-        [r for b in batches for r in b], MESSAGE_SCHEMA
-    )
-    want = {
-        (r.i, r.bkt, r.c) for r in cms_cells(all_rows, "topic").collect()
-    }
-    got = {
-        (r.i, r.bkt, r.c)
-        for r in spark.read.parquet(str(tmp_path / "state")).collect()
-    }
-    assert got == want and got
-
-    # replay epoch 0: ledger must suppress the double-add
-    sink.process_batch(
-        spark.createDataFrame(batches[0], MESSAGE_SCHEMA), epoch_id=0
-    )
-    again = {
-        (r.i, r.bkt, r.c)
-        for r in spark.read.parquet(str(tmp_path / "state")).collect()
-    }
-    assert again == want
-
-    # point estimates upper-bound the true counts
-    from collections import Counter
-
-    true = Counter(t for b in batches for (_, t, *_rest) in b)
-    keys = spark.createDataFrame([(k,) for k in true], "k string")
-    est = {r.k: r.est_n for r in sink.estimate(spark, keys).collect()}
-    for k, n in true.items():
-        assert est[k] >= n
-
-
 def test_stream_static_broadcast_enrichment(spark, staged, tmp_path):
     """Stream–static join: every micro-batch enriches against a static
     control dimension (the A8 routing shape in streaming form); the

@@ -1,209 +1,10 @@
-"""Watermark semantics: on-time aggregation + late-data drop."""
+"""Event-time windows over the replayed message stream: a watermark
+closes tumbling windows, and the stream's per-window aggregate equals the
+batch computation over the same messages."""
 
 import datetime as dt
 
 from mqtt2sql_spark.streaming.pipeline import MESSAGE_SCHEMA, message_file_stream
-from mqtt2sql_spark.streaming.windows import windowed_counts
-
-_D0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-
-def _write_slice(spark, path, rows, mtime):
-    spark.createDataFrame(
-        [
-            (_D0 + dt.timedelta(hours=h), t, b"x", 0, 0, e)
-            for t, h, e in rows
-        ],
-        MESSAGE_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    # the file source orders batches by modification time — make the
-    # intended replay order unambiguous
-    import os
-
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            os.utime(os.path.join(root, f), (mtime, mtime))
-    os.utime(path, (mtime, mtime))
-
-
-def test_tumbling_window_with_watermark_drops_late_rows(spark, tmp_path):
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    import time
-
-    now = time.time()
-    # batch 0: day-1 data, advancing the watermark far past day 0
-    _write_slice(
-        spark,
-        str(input_dir / "000.parquet"),
-        [("a", 0, 1), ("a", 1, 2), ("b", 2, 3), ("a", 26, 4)],
-        mtime=now - 120,
-    )
-    # batch 1: neutral day-1 row — the watermark computed from batch 0
-    # (max event time - 1 h) takes effect no later than this batch's end
-    _write_slice(
-        spark, str(input_dir / "001.parquet"), [("b", 27, 9)], mtime=now - 60
-    )
-    # batch 2: a row >26 h older than the watermark → must be DROPPED
-    # from its (already finalized) day-0 window
-    _write_slice(
-        spark, str(input_dir / "002.parquet"), [("a", 0, 5)], mtime=now
-    )
-
-    stream = message_file_stream(spark, str(input_dir) + "/*")
-    agg = windowed_counts(stream, window="1 day", watermark="1 hour")
-    out_dir = tmp_path / "out"
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.read.parquet(str(out_dir)).collect()
-    got = {(r.window_start, r.topic): r.n for r in rows}
-    # append mode emits only windows finalized by the watermark: day 0
-    assert got.get((_D0, "a")) == 2      # late event_id=5 NOT counted
-    assert got.get((_D0, "b")) == 1
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from mqtt2sql_spark.streaming.windows import interval_join
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    import time
-
-    _write_slice(
-        spark,
-        str(input_dir / "000.parquet"),
-        # purchases (topic p) and clicks (topic c) interleaved per user-key
-        [("p", 1, 1), ("c", 1, 2), ("p", 2, 3), ("c", 26, 4), ("p", 27, 5)],
-        mtime=time.time(),
-    )
-    stream = message_file_stream(spark, str(input_dir) + "/*")
-    purchases = stream.filter(F.col("topic") == "p").select(
-        F.lit(1).alias("k"), F.col("ts"), F.col("event_id")
-    )
-    clicks = stream.filter(F.col("topic") == "c").select(
-        F.lit(1).alias("k_r"),
-        F.col("ts").alias("ts_r"),
-        F.col("event_id").alias("click_id"),
-    )
-    joined = interval_join(
-        purchases, clicks, by="k", max_gap="2 hours", watermark="1 hour"
-    )
-    out_dir = tmp_path / "out"
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.event_id, r.click_id)
-        for r in spark.read.parquet(str(out_dir)).collect()
-    }
-    # click@h1 pairs with purchases at h1(no: same ts ok <=) h2 (within 2h);
-    # click@h26 pairs with purchase@h27; purchase@h1 precedes no click <= it
-    # except click@h1 (ts equal → included)
-    assert got == {(1, 2), (3, 2), (5, 4)}
-
-
-def test_dedup_within_watermark_suppresses_replayed_messages(
-    spark, tmp_path
-):
-    import time
-
-    from mqtt2sql_spark.streaming.windows import dedup_within_watermark
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    now = time.time()
-    # batch 0: event 1 delivered twice (same-batch duplicate) + event 2
-    _write_slice(
-        spark,
-        str(input_dir / "000.parquet"),
-        [("a", 0, 1), ("a", 0, 1), ("b", 0, 2)],
-        mtime=now - 60,
-    )
-    # batch 1: event 1 replayed again (cross-batch duplicate, well inside
-    # the watermark horizon) + fresh event 3
-    _write_slice(
-        spark,
-        str(input_dir / "001.parquet"),
-        [("a", 0, 1), ("a", 1, 3)],
-        mtime=now,
-    )
-
-    stream = message_file_stream(spark, str(input_dir) + "/*")
-    deduped = dedup_within_watermark(stream, watermark="2 hours")
-    out_dir = tmp_path / "out"
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(str(out_dir)).collect()
-    seen = [(r.topic, r.event_id) for r in rows]
-    assert sorted(seen) == [("a", 1), ("a", 3), ("b", 2)]
-
-
-def test_session_window_merges_and_finalizes_with_watermark(spark, tmp_path):
-    """Streaming sessionization: events within the gap merge into one
-    growing session; a quiet period + advanced watermark finalizes it
-    (append mode only emits closed sessions)."""
-    from mqtt2sql_spark.streaming.windows import session_windows
-    import time
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    now = time.time()
-    # topic "a": 3 events 10 min apart (one session: gap 30 min);
-    # topic "b": 2 events 2 h apart (two sessions)
-    _write_slice(
-        spark,
-        str(input_dir / "000.parquet"),
-        [("a", 0.0, 1), ("a", 1 / 6, 2), ("a", 2 / 6, 3), ("b", 0.0, 4), ("b", 2.0, 5)],
-        mtime=now - 60,
-    )
-    # far-future row advances the watermark past every session above
-    _write_slice(
-        spark, str(input_dir / "001.parquet"), [("c", 50.0, 6)], mtime=now
-    )
-
-    stream = message_file_stream(spark, str(input_dir) + "/*")
-    sess = session_windows(
-        stream, gap="30 minutes", watermark="1 hour", key_col="topic"
-    )
-    out_dir = tmp_path / "out"
-    q = (
-        sess.writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.read.parquet(str(out_dir)).collect()
-    got = {(r.topic, r.session_start): r.n_events for r in rows}
-    # "a": one merged 3-event session starting at D0
-    assert got.get(("a", _D0)) == 3
-    # "b": two singleton sessions
-    assert got.get(("b", _D0)) == 1
-    assert got.get(("b", _D0 + dt.timedelta(hours=2))) == 1
 
 
 def test_streaming_ohlc_matches_batch(spark, tmp_path):
@@ -297,144 +98,3 @@ def test_streaming_ohlc_matches_batch(spark, tmp_path):
     closed = {k: v for k, v in expect.items()
               if k[1] < dt.datetime(2024, 1, 1, 2)}
     assert got == closed
-
-
-def test_throttle_stream_matches_batch_first_in_bucket(spark, tmp_path):
-    """Feed two in-order micro-batches; the streamed throttle output must
-    equal the batch first-in-bucket computation over the union."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from mqtt2sql_spark.streaming.windows import throttle_stream
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    import time
-
-    now = time.time()
-    # minutes offsets: bucket = 5 min → events 0,1 share bucket 0; 6 in
-    # bucket 1; second batch adds bucket-0 dup (dropped: state horizon
-    # still open) and bucket-2 first
-    rows0 = [("a", 0, 1), ("a", 1, 2), ("b", 0, 3), ("a", 6, 4)]
-    rows1 = [("a", 3, 5), ("a", 11, 6), ("b", 2, 7)]
-
-    def write(path, rows, mtime):
-        spark.createDataFrame(
-            [
-                (_D0 + dt.timedelta(minutes=m), t, b"x", 0, 0, e)
-                for t, m, e in rows
-            ],
-            MESSAGE_SCHEMA,
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-        import os
-
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                os.utime(os.path.join(root, f), (mtime, mtime))
-        os.utime(path, (mtime, mtime))
-
-    write(str(input_dir / "000.parquet"), rows0, now - 120)
-    write(str(input_dir / "001.parquet"), rows1, now - 60)
-
-    stream = message_file_stream(spark, str(input_dir) + "/*")
-    out = throttle_stream(stream, keys=("topic",), bucket_seconds=300)
-    out_dir = tmp_path / "out"
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.topic, r.event_id)
-        for r in spark.read.parquet(str(out_dir)).collect()
-    }
-
-    # batch twin: first (ts, event_id) per (topic, 5-min bucket)
-    all_rows = spark.createDataFrame(
-        [
-            (_D0 + dt.timedelta(minutes=m), t, b"x", 0, 0, e)
-            for t, m, e in rows0 + rows1
-        ],
-        MESSAGE_SCHEMA,
-    )
-    bkt = F.expr("unix_micros(ts) DIV 300000000")
-    w = W.partitionBy("topic", bkt).orderBy("ts", "event_id")
-    want = {
-        (r.topic, r.event_id)
-        for r in all_rows.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    assert got == want
-    assert ("a", 1) in got and ("a", 4) in got and ("a", 6) in got
-    assert ("a", 2) not in got and ("a", 5) not in got
-
-
-def test_interval_join_left_outer_emits_unmatched_after_watermark(
-    spark, tmp_path
-):
-    """leftOuter stream-stream interval join: matched rows pair as in the
-    inner case; unmatched purchases emit (click_id null) once the
-    watermark passes their join window."""
-    from pyspark.sql import functions as F
-
-    from mqtt2sql_spark.streaming.windows import interval_join
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    import time
-
-    now = time.time()
-    # batch 0: purchase@h1 with a click@h1 (match); purchase@h5 whose 2h
-    # lookback (h3, h5] contains no click
-    _write_slice(
-        spark,
-        str(input_dir / "000.parquet"),
-        [("c", 1, 2), ("p", 1, 1), ("p", 5, 3)],
-        mtime=now - 60,
-    )
-    # batch 1: far-future rows push the watermark well past h2+2h so the
-    # unmatched purchase's state expires and the null row is emitted
-    _write_slice(
-        spark,
-        str(input_dir / "001.parquet"),
-        [("c", 200, 8), ("p", 201, 9)],
-        mtime=now,
-    )
-    stream = message_file_stream(spark, str(input_dir) + "/*")
-    purchases = stream.filter(F.col("topic") == "p").select(
-        F.lit(1).alias("k"), F.col("ts"), F.col("event_id")
-    )
-    clicks = stream.filter(F.col("topic") == "c").select(
-        F.lit(1).alias("k_r"),
-        F.col("ts").alias("ts_r"),
-        F.col("event_id").alias("click_id"),
-    )
-    joined = interval_join(
-        purchases,
-        clicks,
-        by="k",
-        max_gap="2 hours",
-        watermark="1 hour",
-        how="leftOuter",
-    )
-    out_dir = tmp_path / "out"
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt_loj"))
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.event_id, r.click_id)
-        for r in spark.read.parquet(str(out_dir)).collect()
-    }
-    assert (1, 2) in got  # matched pair
-    assert (3, None) in got  # unmatched left emitted after expiry
