@@ -84,28 +84,30 @@ def _w_col() -> Column:
     return out
 
 
-def hll_registers(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
-    """(group, bucket, rho) HLL registers for distinct-`key_col` per group.
+def hll_registers(
+    df: DataFrame, group_cols: list[str], key_col: str
+) -> DataFrame:
+    """(*group_cols, bucket, rho) HLL registers for distinct-`key_col` per
+    group: md5 of the key as a string, bucket = first two nibbles mod M,
+    rho = leading zeros of the next W_BITS bits + 1, max(rho) per
+    (group, bucket).
 
     The register relation IS the mergeable sketch state: max(rho) per
     (group, bucket) over any union of register sets equals the registers
-    of the unioned raw data — the property hll_daily_merge's oracle
-    proves and streaming incremental maintenance relies on
-    (foreachBatch merges each microbatch's registers into a bounded
-    state table of ≤ M rows per group instead of retaining raw keys)."""
-    h = df.select(
-        F.col(group_col).alias("grp"),
-        F.md5(F.col(key_col).cast("string")).alias("hh"),
-    )
-    nib = h.select(
-        "grp",
+    of the unioned raw data — what hll_daily_merge and
+    hll_rolling_30d_distinct rely on when they merge per-day registers
+    instead of re-reading the raw keys."""
+    nib = df.select(
+        *group_cols, F.md5(F.col(key_col).cast("string")).alias("hh")
+    ).select(
+        *group_cols,
         ((_nib_col(1) * 16 + _nib_col(2)) % M).alias("bucket"),
         _w_col().alias("w"),
     )
     rho = F.when(F.col("w") == 0, F.lit(W_BITS + 1)).otherwise(
         F.lit(W_BITS + 1) - F.length(F.bin("w"))
     )
-    return nib.groupBy("grp", "bucket").agg(F.max(rho).alias("rho"))
+    return nib.groupBy(*group_cols, "bucket").agg(F.max(rho).alias("rho"))
 
 
 @register(
@@ -154,18 +156,7 @@ def hll_registers(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
 )
 def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    h = ev.select(
-        "event_type", F.md5(F.col("user_id").cast("string")).alias("hh")
-    )
-    nib = h.select(
-        "event_type",
-        ((_nib_col(1) * 16 + _nib_col(2)) % M).alias("bucket"),
-        _w_col().alias("w"),
-    )
-    rho = F.when(F.col("w") == 0, F.lit(W_BITS + 1)).otherwise(
-        F.lit(W_BITS + 1) - F.length(F.bin("w"))
-    )
-    reg = nib.groupBy("event_type", "bucket").agg(F.max(rho).alias("rho"))
+    reg = hll_registers(ev, ["event_type"], "user_id")
     # F.shiftleft only takes a literal shift — the SQL form shifts by a column
     term = F.expr(f"shiftleft(CAST(1 AS BIGINT), {W_BITS + 1} - rho)")
     tot = reg.groupBy("event_type").agg(
@@ -247,22 +238,12 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def hll_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    h = ev.select(
-        "event_type",
-        F.date_trunc("day", "ts").alias("day"),
-        F.md5(F.col("user_id").cast("string")).alias("hh"),
-    )
-    nib = h.select(
-        "event_type",
-        "day",
-        ((_nib_col(1) * 16 + _nib_col(2)) % M).alias("bucket"),
-        _w_col().alias("w"),
-    )
-    rho = F.when(F.col("w") == 0, F.lit(W_BITS + 1)).otherwise(
-        F.lit(W_BITS + 1) - F.length(F.bin("w"))
-    )
-    day_reg = nib.groupBy("event_type", "day", "bucket").agg(
-        F.max(rho).alias("rho")
+    day_reg = hll_registers(
+        ev.select(
+            "event_type", F.date_trunc("day", "ts").alias("day"), "user_id"
+        ),
+        ["event_type", "day"],
+        "user_id",
     )
     merged = day_reg.groupBy("event_type", "bucket").agg(
         F.max("rho").alias("rho")
@@ -1134,19 +1115,11 @@ ROLL_DAYS = 30
 )
 def hll_rolling_30d_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    h = ev.select(
-        F.col("ts").cast("date").alias("day"),
-        F.md5(F.col("user_id").cast("string")).alias("hh"),
+    day_reg = hll_registers(
+        ev.select(F.col("ts").cast("date").alias("day"), "user_id"),
+        ["day"],
+        "user_id",
     )
-    nib = h.select(
-        "day",
-        ((_nib_col(1) * 16 + _nib_col(2)) % M).alias("bucket"),
-        _w_col().alias("w"),
-    )
-    rho = F.when(F.col("w") == 0, F.lit(W_BITS + 1)).otherwise(
-        F.lit(W_BITS + 1) - F.length(F.bin("w"))
-    )
-    day_reg = nib.groupBy("day", "bucket").agg(F.max(rho).alias("rho"))
     days = day_reg.select("day").distinct().select(
         F.col("day").alias("tday")
     )

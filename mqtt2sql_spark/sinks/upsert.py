@@ -26,7 +26,13 @@ Per micro-batch, each input is read once and no probe job runs:
     without a second read of the pre-batch version or a state store;
   * history rows = operators/history.history_rows, the batch operator
     (enabled messages, minus consecutive-duplicate values when diffonly),
-    with its lag over the batch seeded by the pre-batch value.
+    with its lag over the batch seeded by the pre-batch value;
+  * the history write (mqtt_history/epoch=<e>/) and the version write
+    (mqtt/v<e>/) run concurrently: neither reads the other's output, so
+    their single-task jobs share the cores instead of queueing.  The
+    publish is the _CURRENT pointer swap that follows once BOTH writes
+    succeeded; if either raises, the exception reaches foreachBatch and
+    the pointer still names the previous version.
 
 An empty batch (every message filtered out) runs the same plan: it
 publishes a version equal to the previous one and an empty history
@@ -39,11 +45,13 @@ parquet laid out as mqtt_history/epoch=<e>/dt=<date(ts)>/ — date for
 partition pruning on time-range queries (SURVEY.md §7.1 M6), epoch so a
 replayed micro-batch replaces its own rows: each batch writes its
 history straight into its epoch directory in overwrite mode, which
-deletes whatever an earlier attempt of the same epoch left there.
-Combined with reading the pre-batch mqtt version (never the one the
-replayed epoch may already have published), every foreachBatch replay
-is a deterministic function of (pre-batch state, batch): at-least-once
-delivery converges for BOTH tables.
+deletes whatever an earlier attempt of the same epoch left there; the
+version write likewise overwrites v<e>, which no reader sees before the
+swap.  Combined with reading the pre-batch mqtt version (never v<e>,
+whether an earlier attempt published it or died after writing it),
+every foreachBatch replay is a deterministic function of (pre-batch
+state, batch): at-least-once delivery converges for BOTH tables, however
+the two concurrent writes of a failed attempt interleaved.
 """
 
 from __future__ import annotations
@@ -52,6 +60,7 @@ import os
 import shutil
 
 import pyarrow.parquet as pq
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -151,13 +160,28 @@ class MqttUpsertSink:
             return self.spark.createDataFrame([], HISTORY_SCHEMA)
         return self.spark.read.schema(HISTORY_SCHEMA).parquet(path)
 
-    def _publish_mqtt(self, df: DataFrame, epoch_id: int) -> None:
-        version = f"v{epoch_id:020d}"
-        out = os.path.join(self.base_dir, "mqtt", version)
+    @staticmethod
+    def _version_name(epoch_id: int) -> str:
+        return f"v{epoch_id:020d}"
+
+    def _write_version(self, df: DataFrame, epoch_id: int) -> None:
+        """Write the epoch's `mqtt` version directory; readers do not see
+        it until _publish names it in _CURRENT."""
+        out = os.path.join(self.base_dir, "mqtt", self._version_name(epoch_id))
         df.write.mode("overwrite").parquet(out)
+
+    def _write_history(self, df: DataFrame, epoch_id: int) -> None:
+        """Write the epoch's history rows into mqtt_history/epoch=<e>/,
+        replacing whatever an earlier attempt of the epoch left there."""
+        df.write.mode("overwrite").partitionBy("dt").parquet(
+            os.path.join(self.base_dir, "mqtt_history", f"epoch={epoch_id}")
+        )
+
+    def _publish(self, epoch_id: int) -> None:
+        """Swap _CURRENT to the epoch's version, then retire old ones."""
         tmp = self._pointer() + ".tmp"
         with open(tmp, "w") as f:
-            f.write(version)
+            f.write(self._version_name(epoch_id))
         os.replace(tmp, self._pointer())  # atomic pointer swap
         # retire older versions (keep previous for readers in flight)
         versions = sorted(
@@ -235,24 +259,39 @@ class MqttUpsertSink:
             dim,
             seed_col="_seed_value",
         ).select("ts", "topicid", "value", F.to_date("ts").alias("dt"))
-        # epoch-idempotent history: this batch owns mqtt_history/epoch=<e>/
-        # and overwrites it whole, so a replayed epoch replaces its own
-        # earlier rows instead of re-appending them
-        hist.write.mode("overwrite").partitionBy("dt").parquet(
-            os.path.join(self.base_dir, "mqtt_history", f"epoch={epoch_id}")
+        mqtt = merged.select(
+            "id",
+            "ts",
+            "topic",
+            "value",
+            "qos",
+            "retain",
+            "history_enable",
+            "history_diffonly",
         )
 
-        # publish last so history readers never see rows for unpublished ids
-        self._publish_mqtt(
-            merged.select(
-                "id",
-                "ts",
-                "topic",
-                "value",
-                "qos",
-                "retain",
-                "history_enable",
-                "history_diffonly",
-            ),
-            epoch_id,
-        )
+        # the two writes read only the cached batch and the pre-batch
+        # version, never each other's output: run the history write on an
+        # InheritableThread (its jobs keep the caller's job group and
+        # local properties) while this thread writes the mqtt version
+        failed: list[BaseException] = []
+
+        def write_history() -> None:
+            try:
+                self._write_history(hist, epoch_id)
+            except BaseException as e:  # re-raised on the caller's thread
+                failed.append(e)
+
+        history_writer = InheritableThread(target=write_history)
+        history_writer.start()
+        try:
+            self._write_version(mqtt, epoch_id)
+        finally:
+            history_writer.join()
+        if failed:
+            raise failed[0]
+
+        # the pointer swap is the publish and follows both writes: once
+        # _CURRENT names v<e>, all of epoch e's history rows are in place,
+        # and a failed write leaves _CURRENT on the previous version
+        self._publish(epoch_id)

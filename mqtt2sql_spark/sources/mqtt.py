@@ -43,6 +43,7 @@ tests).  Options:
 
 from __future__ import annotations
 
+import collections
 import datetime as dt
 from typing import Iterator
 
@@ -196,7 +197,12 @@ class PahoTransport:
         self.cert_file = cert_file
         self.key_file = key_file
         self.tls_insecure = tls_insecure
-        self._buffer: list[tuple[str, bytes, int, int]] = []
+        # paho's network thread appends while poll pops from the other
+        # end; deque append/popleft are atomic, and the buffer object
+        # is never replaced, so no message lands in a discarded list
+        self._buffer: collections.deque[tuple[str, bytes, int, int]] = (
+            collections.deque()
+        )
         self._clients: list = []
 
     def connect(self) -> None:
@@ -239,8 +245,8 @@ class PahoTransport:
             self._clients.append(client)
 
     def poll(self, max_n: int) -> list[tuple[str, bytes, int, int]]:
-        out, self._buffer = self._buffer[:max_n], self._buffer[max_n:]
-        return out
+        buf = self._buffer
+        return [buf.popleft() for _ in range(min(max_n, len(buf)))]
 
     def close(self) -> None:  # pragma: no cover
         for client in self._clients:

@@ -242,6 +242,98 @@ def test_paho_multi_url_subscribes_everywhere(fake_paho):
     assert by_host["b"].connected[1] == 2883
 
 
+def test_paho_poll_keeps_message_delivered_mid_poll(fake_paho):
+    """A message paho's network thread delivers while poll is taking a
+    batch off the buffer is returned by a later poll, not dropped.  The
+    buffer's read hook delivers it from a second thread, then waits for
+    that thread, right after poll has read what it keeps for later."""
+    import threading
+
+    from mqtt2sql_spark.sources.mqtt import PahoTransport
+
+    t = PahoTransport("mqtt://broker/t/#")
+    t.connect()
+    (c,) = fake_paho
+
+    def deliver(topic):
+        msg = types.SimpleNamespace(topic=topic, payload=b"v", qos=0, retain=0)
+        c.on_message(c, None, msg)
+
+    for i in range(3):
+        deliver(f"t/{i}")
+    delivered = []
+
+    def deliver_from_network_thread():
+        if not delivered:
+            delivered.append(True)
+            th = threading.Thread(target=deliver, args=("t/late",))
+            th.start()
+            th.join(timeout=10)
+            assert not th.is_alive()
+
+    class MidPollDelivery(type(t._buffer)):
+        def __getitem__(self, i):
+            out = super().__getitem__(i)
+            if isinstance(i, slice) and i.start is not None:  # the remainder
+                deliver_from_network_thread()
+            return out
+
+        def popleft(self):
+            out = super().popleft()
+            deliver_from_network_thread()
+            return out
+
+    t._buffer = MidPollDelivery(t._buffer)
+    got = t.poll(2) + t.poll(10)
+    assert delivered
+    assert [m[0] for m in got] == ["t/0", "t/1", "t/2", "t/late"]
+
+
+def test_paho_poll_under_concurrent_delivery_loses_nothing(fake_paho):
+    """Eight network threads deliver while poll drains: every message
+    arrives exactly once, in each thread's order."""
+    import threading
+
+    from mqtt2sql_spark.sources.mqtt import PahoTransport
+
+    t = PahoTransport("mqtt://broker/t/#")
+    t.connect()
+    (c,) = fake_paho
+    n_threads, per_thread = 8, 2000
+
+    def network_thread(k):
+        for i in range(per_thread):
+            msg = types.SimpleNamespace(
+                topic=f"t/{k}", payload=str(i).encode(), qos=0, retain=0
+            )
+            c.on_message(c, None, msg)
+
+    threads = [
+        threading.Thread(target=network_thread, args=(k,))
+        for k in range(n_threads)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        got = []
+        while any(th.is_alive() for th in threads):
+            got += t.poll(7)
+        for th in threads:
+            th.join(timeout=30)
+            assert not th.is_alive()
+        got += t.poll(n_threads * per_thread)
+    finally:
+        sys.setswitchinterval(interval)
+    by_thread = {}
+    for topic, payload, _, _ in got:
+        by_thread.setdefault(topic, []).append(int(payload))
+    assert by_thread == {
+        f"t/{k}": list(range(per_thread)) for k in range(n_threads)
+    }
+
+
 def test_make_transport_forwards_tls_options(fake_paho):
     from mqtt2sql_spark.sources.mqtt import _make_transport
 

@@ -165,7 +165,7 @@ def test_streaming_hll_register_maintenance(spark, staged, tmp_path):
             batch_df.select(
                 "topic", F.col("value").cast("string").alias("v")
             ),
-            "topic",
+            ["topic"],
             "v",
         )
         if state_root.exists():
@@ -174,7 +174,7 @@ def test_streaming_hll_register_maintenance(spark, staged, tmp_path):
                 prev = spark.read.parquet(str(state_root / versions[-1]))
                 regs = (
                     prev.unionByName(regs)
-                    .groupBy("grp", "bucket")
+                    .groupBy("topic", "bucket")
                     .agg(F.max("rho").alias("rho"))
                 )
         regs.write.mode("overwrite").parquet(
@@ -191,19 +191,19 @@ def test_streaming_hll_register_maintenance(spark, staged, tmp_path):
 
     final_version = sorted(os.listdir(state_root))[-1]
     got = {
-        (r["grp"], r["bucket"], r["rho"])
+        (r["topic"], r["bucket"], r["rho"])
         for r in spark.read.parquet(
             str(state_root / final_version)
         ).collect()
     }
     all_msgs = spark.read.schema(MESSAGE_SCHEMA).parquet(str(staged) + "/*")
     want = {
-        (r["grp"], r["bucket"], r["rho"])
+        (r["topic"], r["bucket"], r["rho"])
         for r in hll_registers(
             all_msgs.select(
                 "topic", F.col("value").cast("string").alias("v")
             ),
-            "topic",
+            ["topic"],
             "v",
         ).collect()
     }
@@ -368,3 +368,70 @@ def test_upsert_sink_history_raises_on_corrupt_file(spark, tmp_path):
         f.write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         sink.history().collect()
+
+
+def test_upsert_sink_failed_history_write_keeps_pointer_and_replays(
+    spark, tmp_path, monkeypatch
+):
+    """The history write and the version write run concurrently; when the
+    history write raises, process_batch raises, _CURRENT still names the
+    previous version, and replaying the epoch leaves both tables equal to
+    a clean run."""
+    b0 = _mk_messages(spark, [("a", 0, "x", 1), ("b", 1, "p", 2)])
+    b1 = _mk_messages(spark, [("a", 10, "y", 3), ("c", 11, "q", 4), ("a", 12, "y", 5)])
+    clean = MqttUpsertSink(spark, str(tmp_path / "clean"))
+    clean.process_batch(b0, 0)
+    clean.process_batch(b1, 1)
+
+    sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
+    sink.process_batch(b0, 0)
+    pointer = (tmp_path / "tables" / "mqtt" / "_CURRENT").read_text()
+    mqtt_before, _ = _state(sink)
+    write_history = sink._write_history
+
+    def fail_after_partial_write(df, epoch_id):
+        write_history(df.limit(1), epoch_id)  # an attempt that got part-way
+        raise RuntimeError("history write failed")
+
+    monkeypatch.setattr(sink, "_write_history", fail_after_partial_write)
+    with pytest.raises(RuntimeError, match="history write failed"):
+        sink.process_batch(b1, 1)
+    assert (tmp_path / "tables" / "mqtt" / "_CURRENT").read_text() == pointer
+    assert _state(sink)[0] == mqtt_before
+
+    monkeypatch.undo()
+    sink.process_batch(b1, 1)  # foreachBatch replays the failed epoch
+    assert _state(sink) == _state(clean)
+
+
+def test_upsert_sink_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Every job process_batch starts, including those of the write that
+    runs on a second thread, carries the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sink = MqttUpsertSink(spark, str(tmp_path / "tables"))
+    sink.process_batch(_mk_messages(spark, [("a", 0, "x", 1)]), 0)
+
+    def marker_jobs(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        return tracker.getJobIdsForGroup(group)
+
+    try:
+        first = max(marker_jobs("before-sink"))
+        sc.setJobGroup("g", "sink batch")
+        sink.process_batch(
+            _mk_messages(spark, [("a", 10, "y", 2), ("b", 11, "p", 3)]), 1
+        )
+        last = min(marker_jobs("after-sink"))
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+
+    during = set(range(first + 1, last))
+    assert during  # the batch ran jobs
+    assert during <= set(tracker.getJobIdsForGroup("g"))
