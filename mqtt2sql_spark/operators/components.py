@@ -104,16 +104,21 @@ def connected_components(
         e = _large_star(e).transform(snapshot)
         e = _small_star(e).transform(snapshot)
         # converged iff e is a star forest: depth 1 (no edge's parent is
-        # another edge's child) AND unique parent per child.  Both
-        # checks scan the materialized snapshot, so they cost no
-        # recompute; checking only depth-1 is NOT enough (a child with
-        # two root parents is depth-1 but not yet contracted).
-        chains = (
-            e.alias("a")
-            .join(e.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi")
-            .count()
+        # another edge's child) AND unique parent per child.  One
+        # aggregate over the materialized snapshot answers both: the
+        # left join to the distinct children matches at most once per
+        # edge, so count(c) counts the chained edges and count(*) stays
+        # |e|.  Checking only depth-1 is NOT enough (a child with two
+        # root parents is depth-1 but not yet contracted).
+        children = e.select(F.col("u").alias("c")).distinct()
+        chains, n_edges, n_children = (
+            e.join(children, F.col("v") == F.col("c"), "left")
+            .agg(
+                F.count("c"), F.count(F.lit(1)), F.countDistinct("u")
+            )
+            .first()
         )
-        if chains == 0 and e.count() == e.select("u").distinct().count():
+        if chains == 0 and n_edges == n_children:
             break
     base = vertices.select(
         F.col(vertex), F.col(vertex).cast("long").alias("lu")

@@ -24,11 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from mqtt2sql_spark.functions.topics import topic_excluded, topic_matches
 from mqtt2sql_spark.sinks.upsert import MqttUpsertSink
-
-MESSAGE_SCHEMA = (
-    "ts timestamp, topic string, value binary, qos int, retain int, "
-    "event_id long"
-)
+from mqtt2sql_spark.sources.mqtt import MESSAGE_SCHEMA
 
 
 def message_file_stream(

@@ -1,0 +1,62 @@
+"""Oracle parity at sf0.01 for queries whose implementation changed
+without an operator test of its own: the Spark rows must hash like the
+DuckDB oracle's rows under tools/check_oracle.py's canonical digest."""
+
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+import duckdb
+import pytest
+
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "tools"))
+
+from check_oracle import arrow_type_violations, df_digest  # noqa: E402
+
+SF_DIR = "/root/testdata/sf0.01"
+
+
+@pytest.fixture(scope="module")
+def duck():
+    from mqtt2sql_spark.fixtures import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "hot_topics_heavy_hitters",
+        "having_hot_topics",
+        "salted_topic_counts",
+        "bloom_pruned_revenue",
+    ],
+)
+def test_query_matches_its_oracle(spark, duck, name):
+    from mqtt2sql_spark.registry import all_specs
+
+    spec = all_specs()[name]
+    sdf = spec.fn(spark, SF_DIR)
+    srows = [tuple(r) for r in sdf.collect()]
+    res = duck.execute(spec.oracle_sql())
+    ocols = [d[0] for d in res.description]
+    otable = res.arrow()
+    orows = list(
+        zip(*(otable.column(i).to_pylist() for i in range(otable.num_columns)))
+    )
+    assert srows, name
+    spark_decimal_cols = {
+        f.name for f in sdf.schema.fields
+        if f.dataType.typeName().startswith("decimal")
+    }
+    assert arrow_type_violations(otable.schema, spark_decimal_cols) == []
+    assert sorted(sdf.columns) == sorted(ocols)
+    assert df_digest(sdf.columns, srows) == df_digest(ocols, orows)

@@ -7,6 +7,8 @@ Asserts on .explain output that:
   * no row-at-a-time Python UDF appears in built-in operator plans.
 """
 
+import pytest
+
 from tests.conftest import SF_DIR
 
 
@@ -413,18 +415,30 @@ def test_returned_items_topk_uses_heap_topk(spark):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_bloom_prune_filters_below_the_semi_join(spark):
-    """The bitmap membership test must run in a Filter BELOW the exact
-    LeftSemi join: candidates shrink before any shuffle."""
+@pytest.mark.parametrize(
+    "name",
+    ["hot_topics_heavy_hitters", "salted_topic_counts", "bloom_pruned_revenue"],
+)
+def test_former_operator_queries_run_on_builtins(spark, name):
+    """These three queries once ran hand-rolled operators (mapInPandas
+    candidate mining, key salting, a broadcast bitmap probe).  The
+    built-in forms are one partial+final aggregation over a scan or a
+    semi join: no Python batch operator, no bitmap probe, no nested-loop
+    or cartesian join."""
     from mqtt2sql_spark.registry import all_specs
 
-    plan = _plan(all_specs()["bloom_pruned_revenue"].fn(spark, SF_DIR))
-    semi_pos = plan.find("LeftSemi")
-    shift_pos = plan.rfind("shiftleft")
-    assert semi_pos != -1 and shift_pos != -1
-    # simple-mode plans print top-down: the probe filter appears after
-    # (deeper than) the semi join line
-    assert shift_pos > semi_pos, plan
+    df = all_specs()[name].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for op in (
+        "MapInPandas",
+        "shiftleft",
+        "BroadcastNestedLoopJoin",
+        "CartesianProduct",
+    ):
+        assert op not in plan, f"{name}: {op}\n{plan}"
+    assert plan.count("HashAggregate") == 2, plan
+    if name == "bloom_pruned_revenue":
+        assert "LeftSemi" in plan, plan
 
 
 def test_scd2_single_window_shuffle(spark):

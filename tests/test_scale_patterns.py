@@ -1,5 +1,5 @@
 """Scale-pattern correctness: approximate sketches, partition pruning,
-salting equivalence — the techniques the 100 TB deployment leans on."""
+plan shapes — the techniques the 100 TB deployment leans on."""
 
 from pyspark.sql import functions as F
 
@@ -46,25 +46,6 @@ def test_partitioned_history_enables_partition_pruning(spark, tmp_path):
     got = pruned.count()
     expect = ev.filter(F.to_date("ts") == "2024-01-03").count()
     assert got == expect > 0
-
-
-def test_salted_aggregation_equals_plain(spark):
-    from mqtt2sql_spark.operators.skew import salted_count_sum
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    salted = {
-        (r.event_type, r.n, round(r.sum_value, 6))
-        for r in salted_count_sum(
-            ev, "event_type", sum_cols=("value",), salt_buckets=8
-        ).collect()
-    }
-    plain = {
-        (r.event_type, r.n, round(r.sum_value, 6))
-        for r in ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .collect()
-    }
-    assert salted == plain
 
 
 def _plan(spark, df) -> str:
@@ -117,52 +98,6 @@ def test_hll_is_two_hash_aggregates(spark):
 
     plan = _plan(spark, hll_distinct_users(spark, SF_DIR))
     assert plan.count("HashAggregate") >= 4  # partial+final × register/total
-
-
-# --- Bloom runtime-filter pruning ------------------------------------------
-
-
-def test_bloom_prune_no_false_negatives(spark):
-    """Pruned-then-verified must equal the plain semi join exactly, and
-    the bloom must actually prune (candidate count < fact count, >= true
-    match count)."""
-    from mqtt2sql_spark.fixtures import load_table
-    from mqtt2sql_spark.operators.bloom import bloom_prune, build_bloom
-    from tests.conftest import SF_DIR
-    import pyspark.sql.functions as F
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    keys = (
-        load_table(spark, SF_DIR, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    bloom = build_bloom(keys, "o_orderkey")
-    candidates = bloom_prune(li, bloom, "l_orderkey")
-
-    exact = li.join(
-        keys, li["l_orderkey"] == keys["o_orderkey"], "left_semi"
-    )
-    verified = candidates.join(
-        keys, F.col("l_orderkey") == F.col("o_orderkey"), "left_semi"
-    )
-    exact_ids = {r["l_orderkey"] * 100 + r["l_linenumber"] for r in exact.collect()}
-    verified_ids = {
-        r["l_orderkey"] * 100 + r["l_linenumber"] for r in verified.collect()
-    }
-    assert verified_ids == exact_ids
-    n_fact, n_cand = li.count(), candidates.count()
-    assert len(exact_ids) <= n_cand < n_fact
-
-
-def test_bloom_bitmap_is_broadcast_small(spark):
-    from mqtt2sql_spark.fixtures import load_table
-    from mqtt2sql_spark.operators.bloom import build_bloom
-    from tests.conftest import SF_DIR
-
-    keys = load_table(spark, SF_DIR, "orders").select("o_orderkey")
-    row = build_bloom(keys, "o_orderkey").collect()[0]
-    assert len(row["bloom"]) <= 1024  # <= 1024 words = 8 KB
 
 
 def test_skyline_local_phase_has_no_shuffle(spark):

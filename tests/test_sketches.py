@@ -34,56 +34,7 @@ def test_daily_merged_hll_equals_direct(spark):
     assert merged == direct
 
 
-# --- heavy hitters ---------------------------------------------------------
-
-
-def test_heavy_hitters_matches_exact_under_any_partitioning(spark):
-    """The verified output must equal the plain groupBy answer no matter
-    how rows are placed (the candidate set may vary; the answer may not).
-    Skewed data: key 'hot' dominates, several mid keys straddle T."""
-    from mqtt2sql_spark.operators.heavyhitters import heavy_hitters
-
-    rows = (
-        [("hot",)] * 100
-        + [("warm%d" % i,) for i in range(5) for _ in range(10)]
-        + [("cold%d" % i,) for i in range(200)]
-    )
-    for n_parts in (1, 3, 16):
-        df = spark.createDataFrame(rows, "topic string").repartition(n_parts)
-        got = {
-            (r["topic"], r["n"])
-            for r in heavy_hitters(df, "topic", 10).collect()
-        }
-        exact = {
-            (r["topic"], r["n"])
-            for r in df.groupBy("topic")
-            .count()
-            .withColumnRenamed("count", "n")
-            .filter("n >= 10")
-            .collect()
-        }
-        assert got == exact, f"mismatch at {n_parts} partitions"
-    assert ("hot", 100) in got and len(got) == 6
-
-
-def test_heavy_hitters_no_qualifying_keys(spark):
-    from mqtt2sql_spark.operators.heavyhitters import heavy_hitters
-
-    df = spark.createDataFrame([("a",), ("b",)], "topic string")
-    assert heavy_hitters(df, "topic", 5).count() == 0
-
-
-def test_heavy_hitters_shuffle_is_candidate_pruned(spark):
-    """Plan contract: the exact recount aggregates AFTER a broadcast
-    semi join (only candidate rows reach the exchange) — no full-table
-    shuffle on the raw key."""
-    from mqtt2sql_spark.operators.heavyhitters import heavy_hitters
-
-    df = spark.createDataFrame(
-        [("k%d" % (i % 7),) for i in range(100)], "topic string"
-    ).repartition(4)
-    plan = heavy_hitters(df, "topic", 10)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+# --- count-min -------------------------------------------------------------
 
 
 def test_count_min_is_one_sided_and_bounded(spark):
