@@ -19,7 +19,7 @@ Layout:
     registry.py    the oracle-checked query registry (imports every plan)
     plans/         QuerySpecs: each query = Spark builder + DuckDB oracle SQL
     operators/     relational operators the plans share (upsert, history,
-                   dense ids, as-of, snapshots, graph and stats operators)
+                   as-of, snapshots, graph and stats operators)
     functions/     scalar helpers (topic wildcards, text), UDAFs, UDTFs
     sources/       MQTT Python DataSource (WAL offsets; paho gated,
                    file-spool and memory transports)

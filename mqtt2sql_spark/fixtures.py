@@ -200,21 +200,25 @@ def mqtt_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Diff detection compares the decoded payload string per (ts, event_id)
     order — the lag window shuffles by topic once; the dense history id is
-    assigned by operators.ids.dense_row_ids (scalable two-phase).
+    one global ``row_number`` in (ts, event_id) order, the oracle's own
+    form.
     """
     from mqtt2sql_spark.operators.history import history_rows
-    from mqtt2sql_spark.operators.ids import dense_row_ids
 
     msg = messages(spark, sf_dir).withColumn(
         "value_str", F.col("value").cast("string")
     )
     dim = topic_dim(spark, sf_dir)
     kept = history_rows(msg, dim, value_col="value_str")
-    return dense_row_ids(
-        kept.select("ts", "topicid", "value_str", "event_id"),
-        order_cols=["ts", "event_id"],
-        id_col="id",
-    ).select("id", "ts", "topicid", "value_str")
+    return kept.select(
+        F.row_number()
+        .over(W.orderBy("ts", "event_id"))
+        .cast("long")
+        .alias("id"),
+        "ts",
+        "topicid",
+        "value_str",
+    )
 
 
 # --------------------------------------------------------------------------

@@ -7,11 +7,10 @@ action.  Two strategies implement that contract:
 
 * **local snapshot** (default): ``DataFrame.localCheckpoint`` —
   truncates lineage and guarantees a single deterministic
-  materialization across plan branches (the ``operators/ids.py``
-  determinism contract) on ``local[N]``.  Its blocks live only on the
-  executors that computed them, so on a real multi-executor cluster a
-  single executor loss makes every downstream stage fail
-  unrecoverably.
+  materialization across plan branches on ``local[N]``.  Its blocks
+  live only on the executors that computed them, so on a real
+  multi-executor cluster a single executor loss makes every downstream
+  stage fail unrecoverably.
 
 * **reliable snapshot** (``MQTT2SQL_RELIABLE_SNAPSHOT=1``):
   ``persist(StorageLevel.DISK_ONLY)`` — keeps the lineage, so a lost

@@ -1,12 +1,9 @@
-"""Distributed two-sample tests over (value, ca, cb) count relations.
+"""Two-sample tests over (value, ca, cb) count relations.
 
 Both operators consume a PRE-AGGREGATED relation — one row per distinct
-value with the two samples' counts at that value — and share the same
-scale skeleton: a two-phase exact prefix sum (per-bucket cumulative
-window + broadcast bucket offsets, the running_totals shape; the bucket
-must be a monotonic integer function of the value) followed by one
-distributive aggregate.  Nothing global is ever sorted or windowed over
-the full relation, and every emitted number is an exact integer
+value with the two samples' counts at that value — and share one shape:
+a running sum ordered by value (one window, ``_BY_VALUE``) followed by
+one distributive aggregate.  Every emitted number is an exact integer
 (rationals cross-multiplied), so results are bit-stable across engines
 and partitionings.
 
@@ -19,61 +16,32 @@ and blocks are non-recoverable on executor loss), switchable to
 ``persist(StorageLevel.DISK_ONLY)`` with recoverable lineage via
 ``MQTT2SQL_RELIABLE_SNAPSHOT=1`` for multi-executor cluster runs.
 Eager local snapshots stay the local default because they guarantee a
-single deterministic materialization across plan branches (the
-operators/ids.py determinism contract) on local[N].
+single deterministic materialization across plan branches on local[N].
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from mqtt2sql_spark.operators.materialize import snapshot
 
-
-def _with_prefix(
-    base: DataFrame, bucket: Column, cols: dict[str, str]
-) -> DataFrame:
-    """Inclusive exact prefix sums of ``cols`` (src -> out name) in
-    value order: in-bucket cumulative window, then broadcast offsets
-    from the tiny per-bucket totals."""
-    b = base.withColumn("_bkt", bucket)
-    w_in = W.partitionBy("_bkt").orderBy("value").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    loc = b
-    for src, out in cols.items():
-        loc = loc.withColumn(f"_in_{out}", F.sum(src).over(w_in))
-    loc = loc.transform(snapshot, eager=False)
-    bkt_tot = loc.groupBy("_bkt").agg(
-        *[F.sum(src).alias(f"_t_{out}") for src, out in cols.items()]
-    )
-    w_off = W.orderBy("_bkt").rowsBetween(W.unboundedPreceding, -1)
-    offs = bkt_tot.select(
-        "_bkt",
-        *[
-            F.coalesce(F.sum(f"_t_{out}").over(w_off), F.lit(0)).alias(
-                f"_o_{out}"
-            )
-            for out in cols.values()
-        ],
-    )
-    joined = loc.join(F.broadcast(offs), "_bkt")
-    for out in cols.values():
-        joined = joined.withColumn(
-            out, F.col(f"_in_{out}") + F.col(f"_o_{out}")
-        )
-    return joined
+# inclusive prefix in value order (values are distinct in the input)
+_BY_VALUE = W.orderBy("value").rowsBetween(W.unboundedPreceding, 0)
 
 
-def ks_statistic(base: DataFrame, bucket: Column) -> DataFrame:
+def ks_statistic(base: DataFrame) -> DataFrame:
     """Two-sample KS over (value, ca, cb): one row with n_a, n_b,
     d_num, d_den (D = d_num/d_den), argmax_v_fp (1e-4 fixed point)."""
     # base (value-grain, already aggregated) feeds both the prefix sums
     # and the totals, and diffs feeds both the max and its argmax —
     # materialize each once so the upstream fact scan runs once, not 4x
     base = base.transform(snapshot, eager=True)
-    cum = _with_prefix(base, bucket, {"ca": "cca", "cb": "ccb"})
+    cum = base.select(
+        "value",
+        F.sum("ca").over(_BY_VALUE).alias("cca"),
+        F.sum("cb").over(_BY_VALUE).alias("ccb"),
+    )
     tot = base.agg(
         F.sum("ca").cast("long").alias("na"),
         F.sum("cb").cast("long").alias("nb"),
@@ -110,16 +78,14 @@ def ks_statistic(base: DataFrame, bucket: Column) -> DataFrame:
     )
 
 
-def mannwhitney_u(base: DataFrame, bucket: Column) -> DataFrame:
+def mannwhitney_u(base: DataFrame) -> DataFrame:
     """Mann-Whitney U over (value, ca, cb): one row with n_a, n_b and
     the doubled statistics u2_a, u2_b (midranks stay integral at 2x)."""
     # same two-consumer shape as ks_statistic: rank sum + totals both
     # read base — one materialization, one upstream scan
     base = base.transform(snapshot, eager=True)
     b = base.withColumn("c", F.col("ca") + F.col("cb"))
-    cum = _with_prefix(b, bucket, {"c": "cinc"}).withColumn(
-        "cprev", F.col("cinc") - F.col("c")
-    )
+    cum = b.withColumn("cprev", F.sum("c").over(_BY_VALUE) - F.col("c"))
     # rank-sum products in DECIMAL(38,0): ca * (2*cprev + c + 1) sums
     # to ~2N^2, past int64 at ~2e9 rows; DuckDB's sum is HUGEINT.
     dec = "decimal(38,0)"

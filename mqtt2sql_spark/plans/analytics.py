@@ -3868,8 +3868,8 @@ def event_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One fact scan: the deduplicated basket set feeds four branches
     # (totals, singles, both join sides); lazily localCheckpoint it so
     # the branches share one materialization instead of re-scanning the
-    # fact table per branch (the operators/ids.py pattern) — baskets is
-    # |users × days × types|, orders of magnitude below the fact.
+    # fact table per branch — baskets is |users × days × types|, orders
+    # of magnitude below the fact.
     baskets = (
         ev.select(
             "user_id", F.col("ts").cast("date").alias("day"), "event_type"
@@ -4087,8 +4087,8 @@ def part_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # span/dau/contrib all branch off the deduplicated (user, day) set —
-    # materialize it once (lazy localCheckpoint, the operators/ids.py
-    # pattern) instead of three fact scans.
+    # materialize it once (lazy localCheckpoint) instead of three fact
+    # scans.
     ud = (
         ev.select("user_id", F.col("ts").cast("date").alias("day"))
         .distinct()
@@ -4530,11 +4530,6 @@ def weighted_median_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- revenue concentration (Lorenz / Pareto deciles) ------------------------
 
-# prefix-sum bucket width: customer revenue bands of 10^7 cents; the band
-# index is a pure function of the sort key (monotonic), so the two-phase
-# prefix sum stays deterministic (operators/ids.py contract)
-_PARETO_BAND = 10_000_000
-
 
 @register(
     "revenue_pareto_deciles",
@@ -4563,13 +4558,9 @@ _PARETO_BAND = 10_000_000
     "customers by exact-cents revenue (total order: rev desc, custkey) "
     "and report, per customer decile, the revenue held and the "
     "cumulative share in basis points — the 'top 10% of customers hold "
-    "X% of revenue' answer.  The global rank and running revenue are a "
-    "TWO-measure distributed prefix sum in one pass (the operators/"
-    "ids.py two-phase shape: per-band cumulative window, parallel "
-    "across revenue bands, plus broadcast band offsets — the oracle's "
-    "single-partition OVER () is exactly what this plan avoids at "
-    "scale).  Bands are a pure function of the revenue value, so the "
-    "result is partitioning-invariant.  All-integer surface.",
+    "X% of revenue' answer.  The global rank and running revenue are "
+    "two windows over one (rev desc, custkey) order, as in the oracle.  "
+    "All-integer surface.",
 )
 def revenue_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -4578,42 +4569,18 @@ def revenue_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rev"
         )
     )
-    base = cr.select(
-        "o_custkey",
+    # rank, running revenue and the grand totals share one window order,
+    # so one sort computes all four
+    w = W.orderBy(F.col("rev").desc(), "o_custkey")
+    w_all = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    ranked = cr.select(
         "rev",
-        (-F.col("rev")).alias("sk"),
-    ).withColumn("_bkt", F.expr(f"-(rev DIV {_PARETO_BAND})"))
-    w_in = (
-        W.partitionBy("_bkt")
-        .orderBy("sk", "o_custkey")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    local = (
-        base.withColumn("_cum_rev_in", F.sum("rev").over(w_in))
-        .withColumn("_cum_n_in", F.count(F.lit(1)).over(w_in))
-        .transform(snapshot, eager=False)
-    )
-    totals = local.groupBy("_bkt").agg(
-        F.max("_cum_rev_in").alias("_tot_rev"),
-        F.max("_cum_n_in").alias("_tot_n"),
-    )
-    w_off = W.orderBy("_bkt").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_bkt",
-        F.coalesce(F.sum("_tot_rev").over(w_off), F.lit(0)).alias("_off_rev"),
-        F.coalesce(F.sum("_tot_n").over(w_off), F.lit(0)).alias("_off_n"),
-    )
-    grand = totals.agg(
-        F.sum("_tot_rev").alias("g_rev"), F.sum("_tot_n").alias("g_n")
-    )
-    ranked = (
-        local.join(F.broadcast(offsets), "_bkt")
-        .select(
-            "rev",
-            (F.col("_off_rev") + F.col("_cum_rev_in")).alias("cum_rev"),
-            (F.col("_off_n") + F.col("_cum_n_in")).alias("rk"),
-        )
-        .crossJoin(F.broadcast(grand))
+        F.sum("rev")
+        .over(w.rowsBetween(W.unboundedPreceding, 0))
+        .alias("cum_rev"),
+        F.row_number().over(w).cast("long").alias("rk"),
+        F.sum("rev").over(w_all).alias("g_rev"),
+        F.count(F.lit(1)).over(w_all).alias("g_n"),
     )
     return (
         ranked.withColumn(
@@ -5378,11 +5345,8 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     "folded (both ECDFs step together), emitted as the exact rational "
     "d_num/d_den via cross-multiplication — the division and the "
     "critical-value compare stay consumer-side, so nothing floats.  "
-    "The ECDFs are distributed prefix sums in the dense_row_ids/"
-    "running_totals two-phase shape: per-bucket cumulative windows "
-    "(bucket = floor(value), monotonic in the sort key) plus broadcast "
-    "bucket offsets — never a single-partition window over the "
-    "distinct-value relation.  argmax location reported as the "
+    "The ECDFs are running sums in value order (one ordered window "
+    "over the distinct-value relation).  argmax location reported as the "
     "smallest value attaining D (floor fixed-point, the "
     "ROUND-OF-RAW-DOUBLE rule).",
     bench=True,
@@ -5401,7 +5365,7 @@ def ks_statistic_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("cb"),
     )
-    return ks_statistic(base, F.floor("value").cast("long"))
+    return ks_statistic(base)
 
 
 # --- Mann-Whitney U (rank-sum) test ----------------------------------------
@@ -5441,9 +5405,8 @@ def ks_statistic_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     "1), so U is emitted as the exact integer 2U with the "
     "complementary u2_b = 2·n_a·n_b − u2_a as a built-in cross-check "
     "— the z-score normalization stays consumer-side.  Rank "
-    "positions come from the same two-phase distributed prefix sum as "
-    "the KS ECDFs (per-bucket window + broadcast offsets), then one "
-    "distributive weighted sum — no global sort, no global window.",
+    "positions come from the same value-ordered running sum as the KS "
+    "ECDFs, then one distributive weighted sum.",
 )
 def mannwhitney_u_click_purchase(
     spark: SparkSession, sf_dir: str
@@ -5461,7 +5424,7 @@ def mannwhitney_u_click_purchase(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("cb"),
     )
-    return mannwhitney_u(base, F.floor("value").cast("long"))
+    return mannwhitney_u(base)
 
 
 # --- exact distributed median via two-phase bin refinement -----------------
@@ -8406,24 +8369,19 @@ def _ks_drift_ctes(t: str) -> str:
     "between each event type's value distribution before and after "
     "the stream midpoint — the numeric-column complement to "
     "transition_drift_chi2's categorical check, together covering "
-    "the two ways a model's inputs go stale.  Reuses the "
-    "operators/stats.ks_statistic two-phase prefix-sum skeleton per "
-    "type (bucketed cumulative windows + broadcast offsets, exact "
-    "cross-multiplied rationals); D surfaces as both the exact "
-    "d_num/d_den pair and integer ppm.",
+    "the two ways a model's inputs go stale.  The operators/stats."
+    "ks_statistic arithmetic per type (value-ordered running sums "
+    "partitioned by type, exact cross-multiplied rationals); D "
+    "surfaces as both the exact d_num/d_den pair and integer ppm.",
     tags=("analytics", "drift"),
 )
 def value_drift_ks_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r07 (guide §1.2/§2.4): one GROUPED pass instead of a Python loop of
-    # five ks_statistic calls — the loop scanned events once per type and
-    # paid ks_statistic's two eager snapshots (and its argmax subchain,
-    # whose output this query discards) five times over.  Identical
-    # arithmetic, computed with event_type carried through the same
-    # two-phase prefix-sum skeleton: in-bucket cumulative windows
-    # partitioned by (type, bucket), bucket offsets per type (bounded:
-    # |types| x |buckets| rows, broadcast back), exact cross-multiplied
-    # rationals.  The oracle keeps its per-type CTE form — results are
-    # row-identical.
+    # one GROUPED pass instead of a Python loop of five ks_statistic
+    # calls (the loop scanned events once per type).  Identical
+    # arithmetic with event_type carried through: running sums and
+    # per-type totals are windows partitioned by type, so one shuffle
+    # feeds both; exact cross-multiplied rationals.  The oracle keeps
+    # its per-type CTE form — results are row-identical.
     ev = load_table(spark, sf_dir, "events")
     split = F.lit(_KS_SPLIT).cast("timestamp")
     base = (
@@ -8433,57 +8391,32 @@ def value_drift_ks_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("ts") < split, 1).otherwise(0)).alias("ca"),
             F.sum(F.when(F.col("ts") >= split, 1).otherwise(0)).alias("cb"),
         )
-        .withColumn("_bkt", F.expr("CAST(floor(value) AS BIGINT) div 50"))
-        # feeds the prefix windows AND the per-type totals — one
-        # materialization, one upstream scan (ks_statistic contract)
-        .transform(snapshot, eager=True)
     )
-    w_in = W.partitionBy("event_type", "_bkt").orderBy("value").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    loc = base.withColumn("cca_in", F.sum("ca").over(w_in)).withColumn(
-        "ccb_in", F.sum("cb").over(w_in)
-    )
-    bkt_tot = base.groupBy("event_type", "_bkt").agg(
-        F.sum("ca").alias("ta"), F.sum("cb").alias("tb")
-    )
-    w_off = (
-        W.partitionBy("event_type")
-        .orderBy("_bkt")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offs = bkt_tot.select(
-        "event_type",
-        "_bkt",
-        F.coalesce(F.sum("ta").over(w_off), F.lit(0)).alias("oa"),
-        F.coalesce(F.sum("tb").over(w_off), F.lit(0)).alias("ob"),
-    )
-    cum = loc.join(F.broadcast(offs), ["event_type", "_bkt"]).select(
-        "event_type",
-        (F.col("cca_in") + F.col("oa")).alias("cca"),
-        (F.col("ccb_in") + F.col("ob")).alias("ccb"),
-    )
-    tot = base.groupBy("event_type").agg(
-        F.sum("ca").cast("long").alias("na"),
-        F.sum("cb").cast("long").alias("nb"),
-    )
+    w_type = W.partitionBy("event_type")
+    w_cum = w_type.orderBy("value").rowsBetween(W.unboundedPreceding, 0)
     # cross-multiplied rationals in DECIMAL(38,0) (the ks_statistic
     # widening): cca*nb and d_num*1e6 overflow int64 past ~3e9 / ~3e6
     # rows per side; DuckDB's window sums are already HUGEINT.
     dec = "decimal(38,0)"
     mx = (
-        cum.join(F.broadcast(tot), "event_type")
-        .select(
+        base.select(
             "event_type",
-            F.abs(
-                F.col("cca").cast(dec) * F.col("nb").cast(dec)
-                - F.col("ccb").cast(dec) * F.col("na").cast(dec)
-            ).alias("dnum"),
+            F.sum("ca").over(w_cum).alias("cca"),
+            F.sum("cb").over(w_cum).alias("ccb"),
+            F.sum("ca").over(w_type).cast("long").alias("na"),
+            F.sum("cb").over(w_type).cast("long").alias("nb"),
         )
-        .groupBy("event_type")
-        .agg(F.max("dnum").alias("d_num"))
+        .groupBy("event_type", "na", "nb")
+        .agg(
+            F.max(
+                F.abs(
+                    F.col("cca").cast(dec) * F.col("nb").cast(dec)
+                    - F.col("ccb").cast(dec) * F.col("na").cast(dec)
+                )
+            ).alias("d_num")
+        )
     )
-    res = tot.join(F.broadcast(mx), "event_type").select(
+    res = mx.select(
         "event_type",
         F.col("na").alias("n_a"),
         F.col("nb").alias("n_b"),
@@ -8783,12 +8716,6 @@ def negative_balance_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ABC inventory classification of parts by revenue -----------------------
 
-# band width for the two-phase distributed cumulative sum over per-part
-# revenue (e6 units = cents x discount-basis-points); parts cluster around
-# ~30 lineitems x ~1e11 e6-units, so DIV 1e12 yields a few hundred
-# deterministic, data-derived bands at any scale factor.
-_ABC_BAND = 10**12
-
 
 @register(
     "abc_parts_classification",
@@ -8825,11 +8752,8 @@ _ABC_BAND = 10**12
     "revenue), B (next 15%), C (tail) — the stock-policy segmentation "
     "cut.  Revenue is the exact integer product cents x (10000 - "
     "discount-bp), so no float ever enters the ranking; the global "
-    "cumulative sum is the two-phase banded prefix sum (per-band "
-    "window in parallel + broadcast band offsets, revenue_pareto_"
-    "deciles model) — the oracle's single-partition OVER () is "
-    "exactly what this plan avoids at 100 TB, where the per-part "
-    "rollup still has ~2e7 rows.",
+    "cumulative sum and the grand total are windows over one "
+    "(rev desc, partkey) order, as in the oracle.",
     tags=("analytics", "inventory"),
 )
 def abc_parts_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8839,30 +8763,13 @@ def abc_parts_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (10000 - F.round(F.col("l_discount") * 10000, 0).cast("long"))
     )
     pr = li.groupBy("l_partkey").agg(F.sum(e6).cast("long").alias("rev"))
-    base = pr.select(
-        "l_partkey",
+    w = W.orderBy(F.col("rev").desc(), "l_partkey")
+    ranked = pr.select(
         "rev",
-        (-F.col("rev")).alias("sk"),
-    ).withColumn("_bkt", F.expr(f"-(rev DIV {_ABC_BAND})"))
-    w_in = (
-        W.partitionBy("_bkt")
-        .orderBy("sk", "l_partkey")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    local = base.withColumn(
-        "_cum_in", F.sum("rev").over(w_in)
-    ).transform(snapshot, eager=False)
-    totals = local.groupBy("_bkt").agg(F.max("_cum_in").alias("_tot"))
-    w_off = W.orderBy("_bkt").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_bkt",
-        F.coalesce(F.sum("_tot").over(w_off), F.lit(0)).alias("_off"),
-    )
-    grand = totals.agg(F.sum("_tot").alias("tot"))
-    ranked = (
-        local.join(F.broadcast(offsets), "_bkt")
-        .select("rev", (F.col("_off") + F.col("_cum_in")).alias("cum"))
-        .crossJoin(F.broadcast(grand))
+        F.sum("rev").over(w.rowsBetween(W.unboundedPreceding, 0)).alias("cum"),
+        F.sum("rev")
+        .over(w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("tot"),
     )
     classed = ranked.withColumn(
         "abc_class",
@@ -10191,10 +10098,8 @@ _SPEARMAN_CORR = (
     "so Spearman reduces to the integer-moment Pearson formula the "
     "repo already pins cross-engine (error_load_correlation model); "
     "ties cannot occur (user_id breaks them), so no tie-correction "
-    "term.  The ranked table is user-dimension-sized, so BOTH rank "
-    "columns run through the two-phase banded prefix rank "
-    "(operators/ids.dense_row_ids, monotonic value buckets) — no "
-    "single-partition window; the moment fold after it is one row.",
+    "term.  Each rank column is one global row_number; the moment "
+    "fold after them is one row.",
     tags=("analytics", "statistics"),
 )
 def spearman_activity_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10210,23 +10115,16 @@ def spearman_activity_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("spend_cents"),
     )
-    # both rank columns via the two-phase banded prefix rank
-    # (operators/ids.dense_row_ids, monotonic value-derived buckets) —
-    # users are a SCALING dimension, so no single-partition row_number
-    from mqtt2sql_spark.operators.ids import dense_row_ids
-
-    rkx = dense_row_ids(
-        u,
-        ["activity", "user_id"],
-        id_col="x",
-        bucket=F.expr("activity div 16"),
+    rk = u.select(
+        F.row_number()
+        .over(W.orderBy("activity", "user_id"))
+        .cast("long")
+        .alias("x"),
+        F.row_number()
+        .over(W.orderBy("spend_cents", "user_id"))
+        .cast("long")
+        .alias("y"),
     )
-    rk = dense_row_ids(
-        rkx,
-        ["spend_cents", "user_id"],
-        id_col="y",
-        bucket=F.expr("spend_cents div 100000"),
-    ).select("x", "y")
     mo = rk.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),
@@ -10762,7 +10660,7 @@ def eoq_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     "demand-cv bands) and rolled into the 9-cell grid with part "
     "counts and exact revenue (AX = automate replenishment, CZ = "
     "make-to-order, etc).  Reuses the abc_parts_classification "
-    "banded prefix sum and the demand_variability_xyz integer cv "
+    "running sum and the demand_variability_xyz integer cv "
     "verbatim, so the cells reconcile exactly with both single-axis "
     "views; one per-part rollup computes every moment in a single "
     "fact pass.",
@@ -10781,39 +10679,20 @@ def abc_xyz_policy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(q).cast("long").alias("s"),
         F.sum(q * q).cast("long").alias("s2"),
     )
-    base = pm.select(
-        "l_partkey",
-        "rev",
-        "n",
-        "s",
-        "s2",
-        (-F.col("rev")).alias("sk"),
-    ).withColumn("_bkt", F.expr(f"-(rev DIV {_ABC_BAND})"))
-    w_in = (
-        W.partitionBy("_bkt")
-        .orderBy("sk", "l_partkey")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    local = base.withColumn(
-        "_cum_in", F.sum("rev").over(w_in)
-    ).transform(snapshot, eager=False)
-    totals = local.groupBy("_bkt").agg(F.max("_cum_in").alias("_tot"))
-    w_off = W.orderBy("_bkt").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_bkt",
-        F.coalesce(F.sum("_tot").over(w_off), F.lit(0)).alias("_off"),
-    )
-    grand = totals.agg(F.sum("_tot").alias("tot"))
+    w = W.orderBy(F.col("rev").desc(), "l_partkey")
     classed = (
-        local.join(F.broadcast(offsets), "_bkt")
-        .select(
+        pm.select(
             "rev",
             "n",
             "s",
             "s2",
-            (F.col("_off") + F.col("_cum_in")).alias("cum"),
+            F.sum("rev")
+            .over(w.rowsBetween(W.unboundedPreceding, 0))
+            .alias("cum"),
+            F.sum("rev")
+            .over(w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+            .alias("tot"),
         )
-        .crossJoin(F.broadcast(grand))
         .select(
             "rev",
             F.expr(
@@ -12440,23 +12319,16 @@ def supplier_load_latency_corr(
             ).alias("mean_lat"),
         )
     )
-    # two-phase banded prefix ranks (dense_row_ids) for BOTH rank
-    # columns — suppliers are a scaling dimension, never rank them
-    # through a single-partition window
-    from mqtt2sql_spark.operators.ids import dense_row_ids
-
-    rkx = dense_row_ids(
-        st,
-        ["load", "l_suppkey"],
-        id_col="x",
-        bucket=F.expr("load div 64"),
+    rk = st.select(
+        F.row_number()
+        .over(W.orderBy("load", "l_suppkey"))
+        .cast("long")
+        .alias("x"),
+        F.row_number()
+        .over(W.orderBy("mean_lat", "l_suppkey"))
+        .cast("long")
+        .alias("y"),
     )
-    rk = dense_row_ids(
-        rkx,
-        ["mean_lat", "l_suppkey"],
-        id_col="y",
-        bucket=F.expr("mean_lat div 16"),
-    ).select("x", "y")
     mo = rk.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),
@@ -12562,24 +12434,20 @@ def bot_score_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sg2"
         ),
     )
-    # median user event count WITHOUT a global row_number over the
-    # scaling user dimension: value-grain counts + two-phase prefix sum
-    # (running_totals), median = value whose cumulative range contains
-    # rank (n+1) DIV 2 — tie-insensitive, identical to the oracle's
-    # row_number selection
-    from mqtt2sql_spark.operators.ids import running_totals
-
+    # median user event count: value-grain counts + running sum, median
+    # = value whose cumulative range contains rank (n+1) DIV 2 —
+    # tie-insensitive, identical to the oracle's row_number selection
     vc = u.groupBy("n_events").agg(F.count(F.lit(1)).alias("c"))
-    cum = running_totals(
-        vc,
-        ["n_events"],
-        "c",
-        bucket=F.expr("n_events div 64"),
-        out_col="cr",
-    )
-    tot = cum.agg(F.max("cr").alias("nn"))
+    w_v = W.orderBy("n_events")
     med = (
-        cum.crossJoin(F.broadcast(tot))
+        vc.select(
+            "n_events",
+            "c",
+            F.sum("c").over(w_v.rowsBetween(W.unboundedPreceding, 0)).alias("cr"),
+            F.sum("c")
+            .over(w_v.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+            .alias("nn"),
+        )
         .filter(
             F.expr(
                 "cr - c < (nn + 1) DIV 2 AND cr >= (nn + 1) DIV 2"
@@ -12721,9 +12589,8 @@ def brand_price_premium(spark: SparkSession, sf_dir: str) -> DataFrame:
     "already predicts worth (license early VIP treatment), a flat "
     "matrix means first orders are noise.  Quartiles are exact "
     "rank-based cuts with (value, custkey) total order over the "
-    "customer dimension, both computed via the two-phase banded "
-    "prefix rank (operators/ids.dense_row_ids) — no single-partition "
-    "window; one materialized customer rollup feeds both rankings.",
+    "customer dimension, both global row_numbers over one customer "
+    "rollup.",
     tags=("analytics", "predictive"),
 )
 def first_order_predictiveness(
@@ -12747,27 +12614,20 @@ def first_order_predictiveness(
         )
         .filter(F.col("n_orders") >= 2)
     )
-    # quartile cuts over the SCALING customer dimension: both ranks via
-    # the two-phase banded prefix rank (dense_row_ids, monotonic value
-    # buckets); materialize the customer rollup once — it feeds both
-    # rankings and the scalar count
-    from mqtt2sql_spark.operators.ids import dense_row_ids
-
-    cu = cu.transform(snapshot, eager=False)
-    nn = cu.agg(F.count(F.lit(1)).alias("n"))
-    ranked = dense_row_ids(
-        cu,
-        ["first_cents", "o_custkey"],
-        id_col="rf",
-        bucket=F.expr("first_cents div 100000"),
+    # quartile cuts: both ranks and the customer count are windows
+    # over the one rollup
+    w_f = W.orderBy("first_cents", "o_custkey")
+    ranked = cu.select(
+        F.row_number().over(w_f).cast("long").alias("rf"),
+        F.row_number()
+        .over(W.orderBy("ltv_cents", "o_custkey"))
+        .cast("long")
+        .alias("rl"),
+        F.count(F.lit(1))
+        .over(w_f.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("n"),
     )
-    ranked = dense_row_ids(
-        ranked,
-        ["ltv_cents", "o_custkey"],
-        id_col="rl",
-        bucket=F.expr("ltv_cents div 100000"),
-    )
-    rk = ranked.crossJoin(F.broadcast(nn)).select(
+    rk = ranked.select(
         F.expr("least(3, (rf - 1) * 4 DIV n)").alias("fq"),
         F.expr("least(3, (rl - 1) * 4 DIV n)").alias("lq"),
     )
@@ -13402,8 +13262,7 @@ def point_biserial_return_price(
     "every segment means price is rank-independent of segment.  All "
     "exact integers — no doubles anywhere.  The rank window runs over "
     "the deduplicated value domain (one row per distinct price), not "
-    "the fact stream; at cluster scale swap in a range-partitioned "
-    "two-phase rank.",
+    "the fact stream.",
     tags=("analytics", "stats"),
 )
 def kruskal_wallis_rank_stats(
@@ -13422,21 +13281,11 @@ def kruskal_wallis_rank_stats(
         ),
     )
     g = pts.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))
-    # the distinct-cents histogram grows with the price domain at
-    # scale: cumulative counts via the two-phase prefix sum
-    # (running_totals, monotonic cents buckets), not a global window
-    from mqtt2sql_spark.operators.ids import running_totals
-
-    rk = running_totals(
-        g,
-        ["cents"],
-        "cnt",
-        bucket=F.expr("cents div 1000000"),
-        out_col="cum",
-    ).select(
-        "cents",
-        (2 * F.col("cum") - F.col("cnt") + 1).alias("avg2"),
+    # cumulative counts over the distinct-cents histogram
+    cum = F.sum("cnt").over(
+        W.orderBy("cents").rowsBetween(W.unboundedPreceding, 0)
     )
+    rk = g.select("cents", (2 * cum - F.col("cnt") + 1).alias("avg2"))
     per_seg = (
         pts.join(rk, "cents")
         .groupBy("c_mktsegment")
@@ -13716,8 +13565,7 @@ def repeat_order_hazard_curve(
     "the day's change points (exact for the step function at every "
     "change).  The boundary stream is two rows per session — orders "
     "of magnitude smaller than events; the one global window runs "
-    "over that reduced stream, and at cluster scale becomes a "
-    "partial-sum + prefix-offset two-phase scan.",
+    "over that reduced stream.",
     tags=("analytics", "sessions", "capacity"),
 )
 def max_concurrent_sessions_daily(
@@ -13760,14 +13608,12 @@ def max_concurrent_sessions_daily(
         .groupBy("t")
         .agg(F.sum("d").alias("net"))
     )
-    # the boundary-event stream scales with sessions: global running
-    # sum via the two-phase prefix sum (running_totals, calendar-day
-    # buckets — its default — monotonic in t), never a single-partition
-    # window
-    from mqtt2sql_spark.operators.ids import running_totals
-
-    curve = running_totals(deltas, ["t"], "net", out_col="conc").select(
-        "t", "conc"
+    # global running sum of the signed boundary deltas
+    curve = deltas.select(
+        "t",
+        F.sum("net")
+        .over(W.orderBy("t").rowsBetween(W.unboundedPreceding, 0))
+        .alias("conc"),
     )
     return curve.groupBy(
         F.date_trunc("day", "t").alias("day")
@@ -15525,26 +15371,24 @@ def winback_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_winback = cust.filter(F.col("n_dormancies") > 0).agg(
         F.count(F.lit(1)).alias("nw")
     )
-    # median dormancy gap WITHOUT a global row_number over the SCALING
-    # dormancy-event relation: value-grain counts + two-phase prefix
-    # sum (running_totals), median = value whose cumulative range
-    # contains rank (n+1) DIV 2 — tie-insensitive by value
-    from mqtt2sql_spark.operators.ids import running_totals
-
+    # median dormancy gap: value-grain counts + running sum, median =
+    # value whose cumulative range contains rank (n+1) DIV 2 —
+    # tie-insensitive by value
     vc = (
         seq.filter(F.col("gap_days") > 180)
         .groupBy("gap_days")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    cum = running_totals(
-        vc,
-        ["gap_days"],
+    w_v = W.orderBy("gap_days")
+    cum = vc.select(
+        "gap_days",
         "c",
-        bucket=F.expr("gap_days div 64"),
-        out_col="cr",
+        F.sum("c").over(w_v.rowsBetween(W.unboundedPreceding, 0)).alias("cr"),
+        F.sum("c")
+        .over(w_v.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("n"),
     )
-    tot = cum.agg(F.max("cr").alias("n"))
-    dd = cum.crossJoin(F.broadcast(tot)).agg(
+    dd = cum.agg(
         # empty cum (no gap > 180d) must yield 0 like the oracle's
         # scalar `(SELECT count(*) FROM d)`, not max-over-empty NULL
         F.coalesce(F.max("n"), F.lit(0)).alias("nd"),

@@ -193,25 +193,23 @@ def history_enable_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="A9 full-history CDC append (history_diffonly=0 path, "
     "mysql.sql:77-83): every enabled message becomes a history row "
-    "(ts, topicid, value); dense ids via scalable two-phase assignment.",
+    "(ts, topicid, value); dense ids from one global row_number.",
 )
 def history_append_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mqtt2sql_spark.operators.ids import dense_row_ids
-
     msg = messages(spark, sf_dir)
     dim = topic_dim(spark, sf_dir)
-    enabled = (
+    return (
         msg.join(F.broadcast(dim), "topic")
         .filter(F.col("history_enable") == 1)
         .select(
+            F.row_number()
+            .over(W.orderBy("ts", "event_id"))
+            .cast("long")
+            .alias("id"),
             "ts",
             F.col("id").alias("topicid"),
             F.col("value").cast("string").alias("value_str"),
-            "event_id",
         )
-    )
-    return dense_row_ids(enabled, ["ts", "event_id"], "id").select(
-        "id", "ts", "topicid", "value_str"
     )
 
 

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from mqtt2sql_spark.fixtures import load_table
 from mqtt2sql_spark.functions.text import STOPWORDS, duck_tokens, tokens
-from mqtt2sql_spark.operators.ids import dense_row_ids
 from mqtt2sql_spark.plans.base import register
 
 # --- deterministic mixture resampling --------------------------------------
@@ -128,12 +127,9 @@ N_SHARDS = 16
     "1-based position in md5-shuffled order plus a round-robin shard "
     "assignment — the reproducible 'seeded shuffle' of an epoch, with "
     "striped shards so each worker's stream is an unbiased sample of "
-    "the corpus.  The dense numbering is operators/ids.dense_row_ids "
-    "(two-phase: per-bucket row_number + tiny broadcast bucket offsets); "
-    "the bucket is the hash's leading byte — 256 buckets, monotonic in "
-    "the sort key and uniformly sized by construction, so no global "
-    "single-partition window touches the corpus (A7's id operator "
-    "re-used at corpus scale).",
+    "the corpus.  The dense numbering is one global row_number in "
+    "(shuffle_key, doc_id) order — A7's dense-id rule applied to the "
+    "corpus.",
 )
 def training_order_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -143,11 +139,9 @@ def training_order_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("order:"), F.col("doc_id").cast("string"))
         ).alias("shuffle_key"),
     )
-    numbered = dense_row_ids(
-        keyed,
-        order_cols=["shuffle_key", "doc_id"],
-        id_col="position",
-        bucket=F.substring("shuffle_key", 1, 2),
+    numbered = keyed.withColumn(
+        "position",
+        F.row_number().over(W.orderBy("shuffle_key", "doc_id")).cast("long"),
     )
     return numbered.select(
         "doc_id",

@@ -1366,25 +1366,18 @@ SYS_SAMPLE_TARGET = 50
     "crosses a step boundary.  Pure integer arithmetic (no RNG, no "
     "float), reproducible for data-freeze audits, and unlike md5-"
     "threshold sampling (sample_weighted) it guarantees the sample "
-    "SIZE, not just the rate.  The cumulative weights come from "
-    "operators/ids.running_totals — the distributed prefix sum: "
-    "per-bucket cumulative windows in parallel plus broadcast bucket "
-    "offsets, never a single-partition window over the corpus (the "
-    "oracle's plain OVER (ORDER BY) is the semantic spec; the Spark "
-    "plan is the scalable encoding of it).",
+    "SIZE, not just the rate.  The cumulative weights are one running "
+    "sum window in doc_id order, the oracle's own OVER (ORDER BY).",
 )
 def systematic_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mqtt2sql_spark.operators.ids import running_totals
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("w")
     )
-    cum = running_totals(
-        docs,
-        order_cols=["doc_id"],
-        value_col="w",
-        bucket=F.expr("doc_id DIV 100"),
-        out_col="cum",
+    cum = docs.withColumn(
+        "cum",
+        F.sum("w")
+        .over(W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0))
+        .cast("long"),
     )
     tot = docs.agg(
         F.greatest(
@@ -1494,8 +1487,8 @@ def vocab_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").transform(fan_out, spark)
     # postings feed three branches (sizes + both join sides): materialize
-    # the distinct once (lazy localCheckpoint, operators/ids.py pattern)
-    # rather than re-shingling the corpus per branch
+    # the distinct once (lazy localCheckpoint) rather than re-shingling
+    # the corpus per branch
     v = (
         docs.select("source", F.explode(tokens("text")).alias("tok"))
         .distinct()
@@ -3494,18 +3487,13 @@ def doc_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "curation"),
 )
 def heaps_law_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mqtt2sql_spark.operators.ids import dense_row_ids
-
     docs = load_table(spark, sf_dir, "documents").transform(fan_out, spark, "doc_id")
-    # rn = global doc_id rank over a SCALING dimension: two-phase
-    # prefix rank (dense_row_ids, bucket = doc_id div 4096 — monotonic
-    # pure function of the data), never a single-partition row_number;
-    # n_docs likewise via aggregate + broadcast, not a global window
-    base = dense_row_ids(
-        docs.select("doc_id", F.size(tokens("text")).alias("n_tok")),
-        ["doc_id"],
-        id_col="rn",
-        bucket=F.expr("doc_id div 4096"),
+    # rn = global doc_id rank (one row_number window); n_docs via
+    # aggregate + broadcast
+    base = docs.select(
+        "doc_id",
+        F.size(tokens("text")).alias("n_tok"),
+        F.row_number().over(W.orderBy("doc_id")).cast("long").alias("rn"),
     ).crossJoin(
         F.broadcast(docs.agg(F.count(F.lit(1)).alias("n_docs")))
     )
@@ -3957,8 +3945,7 @@ def char_trigram_lang_overlap(
     "is built from: stage 1 trains first, stage 4 (low-stopword = "
     "listy/boilerplate/code-ish text) lands late or gets downweighted."
     "  Integer fixed-point score, total-ordered ranking "
-    "(sw_e4 DESC, doc_id) via the two-phase banded prefix rank "
-    "(operators/ids.dense_row_ids) — no single-partition window.",
+    "(sw_e4 DESC, doc_id) as one global row_number.",
     tags=("text", "training"),
 )
 def curriculum_quality_stages(
@@ -3976,17 +3963,12 @@ def curriculum_quality_stages(
         "sw_e4",
         F.expr("CAST(sw_num DIV greatest(n_toks, 1) AS BIGINT)"),
     )
-    # global DESC rank over the SCALING document dimension: two-phase
-    # banded prefix rank (dense_row_ids over the negated score, bucket
-    # monotonic in it) + broadcast scalar count — never a
-    # single-partition row_number
-    from mqtt2sql_spark.operators.ids import dense_row_ids
-
-    rk = dense_row_ids(
-        scored.withColumn("_neg", -F.col("sw_e4")),
-        ["_neg", "doc_id"],
-        id_col="rn",
-        bucket=F.expr("_neg div 100"),
+    # global DESC rank + broadcast scalar count
+    rk = scored.withColumn(
+        "rn",
+        F.row_number()
+        .over(W.orderBy(F.col("sw_e4").desc(), "doc_id"))
+        .cast("long"),
     ).crossJoin(
         F.broadcast(docs.agg(F.count(F.lit(1)).alias("n")))
     )
@@ -4992,66 +4974,22 @@ def quality_pass_by_length_bucket(
     "Far fewer runs than expected = sources loaded in contiguous "
     "blocks, which makes ANY prefix/range sample source-biased and "
     "explains dedup_survivor_source_bias's keep-min skew.  One "
-    "ordered lag over doc_id (two-phase at scale), one per-source "
-    "agg.",
+    "ordered lag over doc_id, one per-source agg.",
     tags=("text", "mixing", "dq"),
 )
 def source_interleave_runs_test(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # two-phase global lag over a SCALING dimension (the ids/stats
-    # skeleton): within-bucket lag in parallel (bucket = doc_id div
-    # 4096, monotonic pure function), then stitch bucket boundaries on
-    # the tiny bucket list — a run starts at a row whose predecessor
-    # differs, where the first row of a bucket compares against the
-    # LAST row of the previous bucket
-    # NULL-safe run detection: encode source into a non-null total tag
-    # (NULL -> sentinel, s -> 'v:'+s, injective), so lag(tag) IS NULL
-    # means exactly "no predecessor" — never "predecessor's source is
-    # NULL" — and the oracle's `lag(source) IS DISTINCT FROM source`
-    # becomes a plain inequality on tags.  The corpus-first-row case
-    # (oracle: NULL IS DISTINCT FROM src) falls out of coalescing the
-    # first bucket's predecessor tag to the NULL sentinel.
-    b = docs.withColumn("_bkt", F.expr("doc_id div 4096")).withColumn(
-        "_tag",
-        F.coalesce(
-            F.concat(F.lit("v:"), F.col("source")), F.lit("Ø")
-        ),
-    )
-    w_in = W.partitionBy("_bkt").orderBy("doc_id")
-    seq = b.select(
-        "_bkt",
-        "doc_id",
-        "_tag",
-        F.lag("_tag").over(w_in).alias("_prev"),
-    )
-    per_bkt = seq.groupBy("_bkt").agg(
-        F.sum(
-            F.when(
-                F.col("_prev").isNotNull()
-                & (F.col("_prev") != F.col("_tag")),
-                1,
-            ).otherwise(0)
-        ).alias("_internal"),
-        F.min_by("_tag", "doc_id").alias("_first_tag"),
-        F.max_by("_tag", "doc_id").alias("_last_tag"),
-    )
-    w_bkt = W.orderBy("_bkt")
-    stitched = per_bkt.withColumn(
-        "_prev_last",
-        F.coalesce(
-            F.lag("_last_tag").over(w_bkt), F.lit("Ø")
-        ),
-    ).select(
-        (
-            F.col("_internal")
-            + F.when(
-                F.col("_prev_last") != F.col("_first_tag"), 1
-            ).otherwise(0)
-        ).alias("_starts")
-    )
-    runs = stitched.agg(F.sum("_starts").alias("r"))
+    # the oracle's `lag(source) IS DISTINCT FROM source` as one global
+    # lag and a null-safe comparison: lag's NULL for "no predecessor"
+    # and for "predecessor's source is NULL" is the same on both sides
+    prev = F.lag("source").over(W.orderBy("doc_id"))
+    runs = docs.select(
+        F.when(prev.eqNullSafe(F.col("source")), 0)
+        .otherwise(1)
+        .alias("is_run_start")
+    ).agg(F.sum("is_run_start").alias("r"))
     comp = (
         docs.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -5107,24 +5045,17 @@ def source_interleave_runs_test(
     "sequential data loading than the corpus-level mix suggests "
     "(the language cut of source_interleave_runs_test's layout "
     "finding, and the drift curve corpus_snapshot_diff summarizes "
-    "at two points).  One global rank (two-phase at scale), one "
-    "agg; exact integers.",
+    "at two points).  One global rank, one agg; exact integers.",
     tags=("text", "mixing", "drift"),
 )
 def lang_mix_by_ingestion_decile(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from mqtt2sql_spark.operators.ids import dense_row_ids
-
     docs = load_table(spark, sf_dir, "documents")
-    # global doc_id rank over a SCALING dimension: two-phase prefix
-    # rank (dense_row_ids, monotonic doc_id div 4096 buckets) + a
-    # broadcast scalar count — never a single-partition window
-    rk = dense_row_ids(
-        docs.select("lang", "doc_id"),
-        ["doc_id"],
-        id_col="rn",
-        bucket=F.expr("doc_id div 4096"),
+    # global doc_id rank + a broadcast scalar count
+    rk = docs.select(
+        "lang",
+        F.row_number().over(W.orderBy("doc_id")).cast("long").alias("rn"),
     ).crossJoin(F.broadcast(docs.agg(F.count(F.lit(1)).alias("n"))))
     d = rk.select(
         F.expr("((rn - 1) * 10) DIV n + 1").alias("decile"), "lang"

@@ -4178,25 +4178,20 @@ def error_recovery_percentiles(
             F.expr("unix_micros(next_ok_ts) - unix_micros(ts)")
         ).alias("rec_us")
     )
-    # nearest-rank percentiles WITHOUT a global row_number (the error
-    # set scales with the corpus): fold to value grain (count per
-    # distinct rec_us), two-phase exact prefix sum of the counts
-    # (operators/ids.running_totals, monotonic minute buckets), then
-    # the value at rank k is the one whose cumulative range
-    # (cum - c, cum] contains k — identical to row_number selection
-    # for any tie order, with no single-partition window anywhere
-    from mqtt2sql_spark.operators.ids import running_totals
-
+    # nearest-rank percentiles: fold to value grain (count per
+    # distinct rec_us), running sum of the counts, then the value at
+    # rank k is the one whose cumulative range (cum - c, cum] contains
+    # k — identical to row_number selection for any tie order
     vc = rec.groupBy("rec_us").agg(F.count(F.lit(1)).alias("c"))
-    cum = running_totals(
-        vc,
-        ["rec_us"],
+    w_v = W.orderBy("rec_us")
+    r = vc.select(
+        "rec_us",
         "c",
-        bucket=F.expr("rec_us div 60000000"),
-        out_col="cr",
+        F.sum("c").over(w_v.rowsBetween(W.unboundedPreceding, 0)).alias("cr"),
+        F.sum("c")
+        .over(w_v.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("n"),
     )
-    tot = cum.agg(F.max("cr").alias("n"))
-    r = cum.crossJoin(F.broadcast(tot))
 
     def at_rank(k_expr: str, name: str):
         return F.max(
@@ -4359,18 +4354,19 @@ def user_activation_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("days").isNotNull())
     )
-    # nearest-rank percentiles over a SCALING user-grain relation:
-    # value-grain counts + two-phase prefix sum (running_totals), then
-    # value-at-rank-k by cumulative range — no single-partition
-    # row_number (ties on days are rank-order-insensitive by value)
-    from mqtt2sql_spark.operators.ids import running_totals
-
+    # nearest-rank percentiles: value-grain counts + running sum, then
+    # value-at-rank-k by cumulative range (ties on days are
+    # rank-order-insensitive by value)
     vc = lat.groupBy("days").agg(F.count(F.lit(1)).alias("c"))
-    cum = running_totals(
-        vc, ["days"], "c", bucket=F.expr("days div 32"), out_col="cr"
+    w_v = W.orderBy("days")
+    q = vc.select(
+        "days",
+        "c",
+        F.sum("c").over(w_v.rowsBetween(W.unboundedPreceding, 0)).alias("cr"),
+        F.sum("c")
+        .over(w_v.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("n"),
     )
-    tot = cum.agg(F.max("cr").alias("n"))
-    q = cum.crossJoin(F.broadcast(tot))
     return q.agg(
         F.max("n").cast("long").alias("n_activated_users"),
         F.max(
@@ -4722,17 +4718,18 @@ def first_passage_cumulative_value(
             "(t_star - unix_micros(t0)) DIV 86400000000"
         ).alias("days"),
     )
-    # nearest-rank percentiles over a SCALING user-grain relation:
-    # value-grain counts + two-phase prefix sum (running_totals) and
-    # value-at-rank-k by cumulative range — no single-partition window
-    from mqtt2sql_spark.operators.ids import running_totals
-
+    # nearest-rank percentiles: value-grain counts + running sum and
+    # value-at-rank-k by cumulative range
     vc = d.groupBy("days").agg(F.count(F.lit(1)).alias("c"))
-    cum = running_totals(
-        vc, ["days"], "c", bucket=F.expr("days div 32"), out_col="cr"
+    w_v = W.orderBy("days")
+    r = vc.select(
+        "days",
+        "c",
+        F.sum("c").over(w_v.rowsBetween(W.unboundedPreceding, 0)).alias("cr"),
+        F.sum("c")
+        .over(w_v.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("n"),
     )
-    tot = cum.agg(F.max("cr").alias("n"))
-    r = cum.crossJoin(F.broadcast(tot))
 
     def at_rank(k_expr: str, name: str):
         return F.max(
@@ -5091,24 +5088,17 @@ def forecast_wape_by_horizon(
     "that picks withWatermark()'s argument for the streaming "
     "windowed aggregations (events_tumbling/sliding_window): the "
     "smallest D under the pipeline's loss budget.  The running max "
-    "runs as the two-phase banded prefix max "
-    "(operators/ids.running_max — no single-partition window); "
-    "exact integer seconds.",
+    "is one ordered window; exact integer seconds.",
     tags=("timeseries", "streaming"),
 )
 def watermark_delay_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    # running max of the event-time high watermark over the SCALING
-    # events fact: two-phase prefix max (operators/ids.running_max,
-    # monotonic event_id buckets) — never a single-partition window
-    from mqtt2sql_spark.operators.ids import running_max
-
-    arr = running_max(
-        ev.select("event_id", F.unix_micros("ts").alias("t_us")),
-        ["event_id"],
-        "t_us",
-        bucket=F.expr("event_id div 4096"),
-        out_col="hw_us",
+    # running max of the event-time high watermark in arrival order
+    arr = ev.select(
+        F.unix_micros("ts").alias("t_us"),
+        F.max(F.unix_micros("ts"))
+        .over(W.orderBy("event_id").rowsBetween(W.unboundedPreceding, 0))
+        .alias("hw_us"),
     )
     lateness = arr.select(
         F.expr("(hw_us - t_us) DIV 1000000").alias("late_s")
@@ -5792,24 +5782,19 @@ def daily_active_users_profile(
             "unix_micros(date_trunc('day', ts)) DIV 86400000000"
         ).alias("d")
     ).agg(F.countDistinct("user_id").alias("u"))
-    # two consumers below (value-grain counts + the n/sum totals):
-    # materialize the tiny day-grain relation once so the fact scan
-    # and distinct-count run once, not twice
-    dau = dau.transform(snapshot, eager=False)
-    # the day list is bounded (~thousands of rows even at decades of
-    # data), but route the rank through the same value-grain two-phase
-    # prefix sum as the user-grain percentile queries so NO registered
-    # plan carries a single-partition row_number over a growing input
-    from mqtt2sql_spark.operators.ids import running_totals
-
+    # value-grain counts + running sum, as in the user-grain
+    # percentile queries; the day count and DAU sum are full-frame
+    # sums over the same order
     vc = dau.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-    cum = running_totals(
-        vc, ["u"], "c", bucket=F.expr("u div 1024"), out_col="cr"
+    w_v = W.orderBy("u")
+    w_all = w_v.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    r = vc.select(
+        "u",
+        "c",
+        F.sum("c").over(w_v.rowsBetween(W.unboundedPreceding, 0)).alias("cr"),
+        F.sum("c").over(w_all).alias("n"),
+        F.sum(F.col("u") * F.col("c")).over(w_all).alias("su"),
     )
-    totals = dau.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("u").alias("su")
-    )
-    r = cum.crossJoin(F.broadcast(totals))
     return r.agg(
         F.max("n").cast("long").alias("n_days"),
         F.max(
@@ -5883,27 +5868,20 @@ def user_value_concentration(
             F.round(F.col("value") * 100, 0).cast("long")
         ).alias("cents")
     )
-    # top-k cohort sums WITHOUT a global row_number over SCALING users:
-    # fold to value grain (count per distinct cents), two-phase DESC
-    # prefix sum (running_totals over -cents, monotonic buckets), then
-    # each value contributes clamp(k - (cr - c), 0, c) of its rows to
-    # the top-k cohort — exact for any user_id tie order because tied
-    # rows share the cents value
-    from mqtt2sql_spark.operators.ids import running_totals
-
+    # top-k cohort sums: fold to value grain (count per distinct
+    # cents), DESC running sum, then each value contributes
+    # clamp(k - (cr - c), 0, c) of its rows to the top-k cohort — exact
+    # for any user_id tie order because tied rows share the cents value
     vc = uv.groupBy("cents").agg(F.count(F.lit(1)).alias("c"))
-    cum = running_totals(
-        vc.withColumn("_neg", -F.col("cents")),
-        ["_neg"],
+    w_v = W.orderBy(F.col("cents").desc())
+    w_all = w_v.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    r = vc.select(
+        "cents",
         "c",
-        bucket=F.expr("_neg div 100000"),
-        out_col="cr",
+        F.sum("c").over(w_v.rowsBetween(W.unboundedPreceding, 0)).alias("cr"),
+        F.sum("c").over(w_all).alias("n"),
+        F.sum(F.col("cents") * F.col("c")).over(w_all).alias("tot"),
     )
-    tot = cum.agg(
-        F.max("cr").alias("n"),
-        F.sum(F.col("cents") * F.col("c")).alias("tot"),
-    )
-    r = cum.crossJoin(F.broadcast(tot))
 
     def share(k_expr: str, name: str):
         return F.expr(

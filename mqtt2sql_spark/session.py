@@ -49,16 +49,15 @@ def get_spark(
         # static hint this cannot pick a hash build the data outgrows).
         # Default 0 disables the rule; 64 MB per-partition build keeps
         # task memory bounded on any cluster and drops both sorts from
-        # the ~30 registry joins whose build side is modest.  Override
-        # per deployment via SPARK_GRAFT_SHJ_THRESHOLD (bytes).
+        # the ~30 registry joins whose build side is modest.
         # COUPLING (r07 ADVICE): the AQE rule only fires while this
         # threshold >= spark.sql.adaptive.advisoryPartitionSizeInBytes
         # (default 64 MB here) — a deployment that raises the advisory
-        # size must raise SPARK_GRAFT_SHJ_THRESHOLD with it or the
-        # SMJ->SHJ conversion silently turns off.
+        # size must raise this threshold with it or the SMJ->SHJ
+        # conversion silently turns off.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

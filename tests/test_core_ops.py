@@ -5,7 +5,6 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from mqtt2sql_spark.operators.history import history_rows
-from mqtt2sql_spark.operators.ids import dense_row_ids
 from mqtt2sql_spark.operators.upsert import latest_per_key
 
 
@@ -95,39 +94,6 @@ def test_diffonly_zero_keeps_duplicates(spark):
     assert history_rows(msgs, ctl).count() == 4
 
 
-def test_dense_row_ids_matches_global_row_number(spark):
-    import random
-
-    rng = random.Random(7)
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (
-            f"t{rng.randrange(5)}",
-            base + dt.timedelta(minutes=rng.randrange(60 * 24 * 20)),
-            "v",
-            i,
-        )
-        for i in range(500)
-    ]
-    df = spark.createDataFrame(
-        rows, "topic string, ts timestamp, value_str string, event_id long"
-    )
-    out = dense_row_ids(df, ["ts", "event_id"], "id")
-    got = [
-        r.id
-        for r in out.orderBy("ts", "event_id").collect()
-    ]
-    assert got == list(range(1, 501))
-
-
-def test_dense_row_ids_single_bucket_fallback(spark):
-    df = spark.createDataFrame(
-        [("a", 3), ("b", 1), ("c", 2)], "k string, v long"
-    )
-    out = dense_row_ids(df, ["v"], "id", bucket=F.lit(0))
-    assert {(r.k, r.id) for r in out.collect()} == {("b", 1), ("c", 2), ("a", 3)}
-
-
 def test_hex_roundtrip_non_utf8_bytes(spark):
     payloads = [bytes([0xFF, 0x00, 0x81]), b"\x01\x02", b""]
     df = spark.createDataFrame([(p,) for p in payloads], "value binary")
@@ -154,115 +120,6 @@ def test_tz_render_dst_boundary(spark):
         ).alias("wall")
     ).collect()
     assert [r.wall for r in out] == ["2024-10-27 02:30:00"] * 2
-
-
-# --- distributed prefix sum -------------------------------------------------
-
-
-def test_running_totals_matches_global_window(spark):
-    """Two-phase prefix sum == single global window cumsum, at any
-    shuffle-partition count (the dense_row_ids determinism contract
-    extended to sums)."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window as W
-
-    from mqtt2sql_spark.operators.ids import running_totals
-
-    rows = [(i, (i * 37) % 11 + 1) for i in range(1, 301)]
-    df = spark.createDataFrame(rows, "k long, v long").repartition(7)
-    want = {
-        (r["k"], r["c"])
-        for r in df.withColumn(
-            "c",
-            F.sum("v").over(
-                W.orderBy("k").rowsBetween(W.unboundedPreceding, 0)
-            ),
-        ).collect()
-    }
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for n in ("3", "13"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
-            got = {
-                (r["k"], r["running_total"])
-                for r in running_totals(
-                    df,
-                    order_cols=["k"],
-                    value_col="v",
-                    bucket=F.expr("k DIV 25"),
-                ).collect()
-            }
-            assert got == want
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def test_running_totals_signed_values(spark):
-    """Bucket totals must be sum(value), not max(cumulative): the two
-    agree only for non-negative inputs, and the +1/-1 interval-boundary
-    deltas of max_concurrent_sessions_daily exposed the max form
-    (witnessed r06: off-by-bucket-residual at every day boundary)."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window as W
-
-    from mqtt2sql_spark.operators.ids import running_totals
-
-    # alternating signs with negative bucket partial sums
-    rows = [(i, 1 if (i * 7) % 3 else -2) for i in range(1, 201)]
-    df = spark.createDataFrame(rows, "k long, v long").repartition(5)
-    want = {
-        (r["k"], r["c"])
-        for r in df.withColumn(
-            "c",
-            F.sum("v").over(
-                W.orderBy("k").rowsBetween(W.unboundedPreceding, 0)
-            ),
-        ).collect()
-    }
-    got = {
-        (r["k"], r["running_total"])
-        for r in running_totals(
-            df, order_cols=["k"], value_col="v", bucket=F.expr("k DIV 17")
-        ).collect()
-    }
-    assert got == want
-
-
-def test_running_max_matches_global_window(spark):
-    """Two-phase prefix max == single global window cummax, at any
-    shuffle-partition count."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window as W
-
-    from mqtt2sql_spark.operators.ids import running_max
-
-    rows = [(i, ((i * 193) % 97) - 20) for i in range(1, 301)]
-    df = spark.createDataFrame(rows, "k long, v long").repartition(7)
-    want = {
-        (r["k"], r["m"])
-        for r in df.withColumn(
-            "m",
-            F.max("v").over(
-                W.orderBy("k").rowsBetween(W.unboundedPreceding, 0)
-            ),
-        ).collect()
-    }
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for n in ("3", "13"):
-            spark.conf.set("spark.sql.shuffle.partitions", n)
-            got = {
-                (r["k"], r["running_max"])
-                for r in running_max(
-                    df,
-                    order_cols=["k"],
-                    value_col="v",
-                    bucket=F.expr("k DIV 25"),
-                ).collect()
-            }
-            assert got == want
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_throttle_keeps_first_and_counts(spark):

@@ -49,8 +49,8 @@ def test_local_snapshot_truncates_lineage(spark, monkeypatch):
 
 
 def test_snapshot_heavy_plans_agree_across_modes(spark, monkeypatch):
-    """Drive two snapshot-heavy operators (two-phase prefix sums inside
-    ks_statistic via the registered plan, and the iterative
+    """Drive two snapshot-heavy operators (the shared value-grain base
+    and diffs inside ks_statistic via the registered plan, and the iterative
     connected-components loop) in both modes; the recoverable mode must
     match the default mode bit-for-bit."""
     from mqtt2sql_spark.registry import all_specs

@@ -38,6 +38,40 @@ def duck():
         "having_hot_topics",
         "salted_topic_counts",
         "bloom_pruned_revenue",
+        # global rank / prefix sum / prefix max / lag as Spark's ordered
+        # window
+        "abc_parts_classification",
+        "abc_xyz_policy_matrix",
+        "bot_score_census",
+        "curriculum_quality_stages",
+        "daily_active_users_profile",
+        "error_recovery_percentiles",
+        "first_order_predictiveness",
+        "first_passage_cumulative_value",
+        "heaps_law_vocab_growth",
+        "history_append_all",
+        "history_diffonly",
+        "history_retention_prune",
+        "history_view_join",
+        "ks_statistic_click_purchase",
+        "kruskal_wallis_rank_stats",
+        "lang_mix_by_ingestion_decile",
+        "mannwhitney_u_click_purchase",
+        "max_concurrent_sessions_daily",
+        "revenue_pareto_deciles",
+        "scd2_asof_snapshot",
+        "scd2_topic_versions",
+        "source_interleave_runs_test",
+        "spearman_activity_value",
+        "supplier_load_latency_corr",
+        "systematic_weighted_sample",
+        "topic_value_asof",
+        "training_order_assignment",
+        "user_activation_latency",
+        "user_value_concentration",
+        "value_drift_ks_by_type",
+        "watermark_delay_sweep",
+        "winback_rate",
     ],
 )
 def test_query_matches_its_oracle(spark, duck, name):

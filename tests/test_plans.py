@@ -323,13 +323,13 @@ _INVARIANCE_KEYS = [
     "hot_topics_heavy_hitters",
     "revenue_pareto_deciles",  # two-measure prefix sum over revenue bands
     "count_min_topic_freq",    # sketch cells must not depend on layout
-    # r06 window migrations — two-phase prefix rank/sum/max and
+    # global rank/prefix sum/prefix max windows and
     # distributed-top-k-then-rank shapes must stay layout-independent
-    "spearman_activity_value",     # two dense_row_ids passes
+    "spearman_activity_value",     # two global row_number ranks
     "user_value_concentration",    # DESC value-grain prefix + clamp
-    "error_recovery_percentiles",  # value-at-rank via running_totals
-    "watermark_delay_sweep",       # running_max over the events fact
-    "max_concurrent_sessions_daily",  # SIGNED running_totals deltas
+    "error_recovery_percentiles",  # value-at-rank via a running sum
+    "watermark_delay_sweep",       # running max over the events fact
+    "max_concurrent_sessions_daily",  # SIGNED running-sum deltas
     "curriculum_quality_stages",   # doc-grain DESC prefix rank
     "hub_removal_edge_survival",   # top-k hubs + left-join survival
     "supplier_risk_scorecard",     # limit(20) then rank the survivors
@@ -359,7 +359,7 @@ def _freeze(v):
 def test_results_invariant_under_shuffle_partition_count(spark):
     """The oracle gate runs under the driver's session config, tests under
     ours, a real cluster under neither — results must not depend on the
-    partition count (the dense_row_ids corruption class from r01)."""
+    partition count (the dense-id corruption class from r01)."""
     from mqtt2sql_spark.registry import all_specs
 
     specs = all_specs()

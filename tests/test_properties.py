@@ -355,8 +355,6 @@ def _two_sample_base(spark, samples, n_parts):
 @given(samples_strategy, st.integers(min_value=1, max_value=5))
 def test_ks_statistic_matches_python_reference(spark, samples, n_parts):
     """Distributed KS == direct Python ECDF evaluation, exactly."""
-    import pyspark.sql.functions as SF
-
     from mqtt2sql_spark.operators.stats import ks_statistic
 
     a = sorted(v for g, v in samples if g == "a")
@@ -368,10 +366,7 @@ def test_ks_statistic_matches_python_reference(spark, samples, n_parts):
         abs(bisect.bisect_right(a, v) * nb - bisect.bisect_right(bs, v) * na)
         for v in {v for _, v in samples}
     )
-    row = ks_statistic(
-        _two_sample_base(spark, samples, n_parts),
-        SF.floor("value").cast("long"),
-    ).collect()[0]
+    row = ks_statistic(_two_sample_base(spark, samples, n_parts)).collect()[0]
     assert (row.n_a, row.n_b, row.d_num, row.d_den) == (
         na, nb, d_num, na * nb
     )
@@ -382,8 +377,6 @@ def test_ks_statistic_matches_python_reference(spark, samples, n_parts):
 @given(samples_strategy, st.integers(min_value=1, max_value=5))
 def test_mannwhitney_matches_python_reference(spark, samples, n_parts):
     """Distributed doubled-rank U == direct Python midrank computation."""
-    import pyspark.sql.functions as SF
-
     from mqtt2sql_spark.operators.stats import mannwhitney_u
 
     vals = sorted(v for _, v in samples)
@@ -400,10 +393,7 @@ def test_mannwhitney_matches_python_reference(spark, samples, n_parts):
     nb = len(samples) - na
     r2a = sum(rank2(v) for v in a)
     u2a = r2a - na * (na + 1)
-    row = mannwhitney_u(
-        _two_sample_base(spark, samples, n_parts),
-        SF.floor("value").cast("long"),
-    ).collect()[0]
+    row = mannwhitney_u(_two_sample_base(spark, samples, n_parts)).collect()[0]
     assert (row.n_a, row.n_b, row.u2_a, row.u2_b) == (
         na, nb, u2a, 2 * na * nb - u2a
     )
@@ -430,16 +420,12 @@ def _two_sample_reference(rel):
 def test_mannwhitney_exact_past_int64_crossover(spark):
     """n_a * (n_a + 1) > 2^63: the rank-sum products must stay exact (the
     DECIMAL(38,0) widening), not overflow a long."""
-    import pyspark.sql.functions as SF
-
     from mqtt2sql_spark.operators.stats import mannwhitney_u
 
     rel = [(1.0, 3_500_000_000, 0), (2.0, 0, 1), (3.0, 1, 0)]
     na, nb, _, u2a = _two_sample_reference(rel)
     assert na * (na + 1) > 2**63
-    row = mannwhitney_u(
-        _count_relation(spark, rel), SF.floor("value").cast("long")
-    ).collect()[0]
+    row = mannwhitney_u(_count_relation(spark, rel)).collect()[0]
     assert (row.n_a, row.n_b, row.u2_a, row.u2_b) == (
         na, nb, u2a, 2 * na * nb - u2a
     ) == (3_500_000_001, 1, 2, 7_000_000_000)
@@ -447,17 +433,13 @@ def test_mannwhitney_exact_past_int64_crossover(spark):
 
 def test_ks_statistic_exact_just_below_int64_limit(spark):
     """n_a * n_b just below 2^63: d_num and d_den come back exact."""
-    import pyspark.sql.functions as SF
-
     from mqtt2sql_spark.operators.stats import ks_statistic
 
     n = 3_037_000_499  # floor(sqrt(2^63))
     rel = [(1.0, n - 1, 0), (2.0, 0, n), (3.0, 1, 0)]
     na, nb, d_num, _ = _two_sample_reference(rel)
     assert 2**63 - 2**33 < na * nb < 2**63
-    row = ks_statistic(
-        _count_relation(spark, rel), SF.floor("value").cast("long")
-    ).collect()[0]
+    row = ks_statistic(_count_relation(spark, rel)).collect()[0]
     assert (row.n_a, row.n_b, row.d_num, row.d_den) == (
         na, nb, d_num, na * nb
     )

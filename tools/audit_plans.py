@@ -31,12 +31,12 @@ sys.path.insert(0, str(REPO))
 # is bounded regardless of data scale: calendar grains (days, weeks,
 # months, hours, dow, fiscal periods), fixed bin/decile/band/digit
 # domains, distinct bounded dimension values (flags, priorities,
-# segments, brands, nations, regions, types), the two-phase skeleton's
-# own tiny bucket-offset branch (`_bkt`-prefixed), or a top-k-limited
-# input (GlobalLimit/TakeOrderedAndProject feeding the window).
-# Anything else is a scale red flag: rank/prefix over documents, users,
-# events, vocab, or distinct metric values must go through
-# operators/ids.py or a distributed top-k.
+# segments, brands, nations, regions, types), `_bkt`-prefixed bucket
+# columns, or a top-k-limited input (GlobalLimit/TakeOrderedAndProject
+# feeding the window).  Anything else is flagged for review: a global
+# rank/prefix over documents, users, events, vocab, or distinct metric
+# values runs as Spark's ordered window unless a measurement shows a
+# hand-rolled distributed form winning (CLAUDE.md).
 _BOUNDED_ORDER_COL = re.compile(
     r"""(?ix) ^(
         _?bkt\w* | \w*_bkt\w*            # skeleton bucket-offset branch

@@ -3,7 +3,9 @@
 The bench set covers the headline queries; this audit sweeps the WHOLE
 registry so a regression in a non-headline plan can't hide.  Single
 timed run per query (after one shared session warmup) — coarse, but
-enough to rank hotspots for a deeper best-of-N look.
+enough to rank hotspots for a deeper best-of-N look.  Each query runs
+under its own job group, and its Spark job count (plan-construction
+snapshots included) prints beside its time.
 
 Usage:  python tools/time_queries.py [sf_dir] [top_n]
 """
@@ -29,21 +31,37 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(f"{sf_dir}/region.parquet").count()  # JVM warmup
 
-    timings: dict[str, float] = {}
+    timings: dict[str, tuple[float, int]] = {}
     for name, spec in all_specs().items():
-        t0 = time.perf_counter()
         try:
-            spec.fn(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            timings[name] = time.perf_counter() - t0
+            timings[name] = time_query(spark, name, spec.fn, sf_dir)
         except Exception as e:  # pragma: no cover
             print(f"ERROR {name}: {str(e).splitlines()[0][:100]}")
-    total = sum(timings.values())
-    print(f"# {len(timings)} queries, {total:.1f}s total at {sf_dir}")
-    for name, t in sorted(timings.items(), key=lambda kv: -kv[1])[:top_n]:
-        print(f"{t:8.3f}  {name}")
+    total = sum(t for t, _ in timings.values())
+    jobs = sum(j for _, j in timings.values())
+    print(
+        f"# {len(timings)} queries, {total:.1f}s total, {jobs} jobs"
+        f" at {sf_dir}"
+    )
+    for name, (t, j) in sorted(timings.items(), key=lambda kv: -kv[1][0])[
+        :top_n
+    ]:
+        print(f"{t:8.3f}  {j:4d}  {name}")
     return 0
+
+
+def time_query(spark, name: str, fn, sf_dir: str) -> tuple[float, int]:
+    """(seconds, Spark jobs) of building ``fn`` and writing it to the
+    noop sink, counted under a job group named after the query."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        elapsed = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return elapsed, len(sc.statusTracker().getJobIdsForGroup(name))
 
 
 if __name__ == "__main__":
