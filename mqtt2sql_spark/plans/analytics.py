@@ -8376,12 +8376,11 @@ def _ks_drift_ctes(t: str) -> str:
     tags=("analytics", "drift"),
 )
 def value_drift_ks_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one GROUPED pass instead of a Python loop of five ks_statistic
-    # calls (the loop scanned events once per type).  Identical
-    # arithmetic with event_type carried through: running sums and
-    # per-type totals are windows partitioned by type, so one shuffle
-    # feeds both; exact cross-multiplied rationals.  The oracle keeps
-    # its per-type CTE form — results are row-identical.
+    # one GROUPED pass over all types, ks_statistic's arithmetic with
+    # event_type carried through: running sums and per-type totals are
+    # windows partitioned by type, so one shuffle feeds both; exact
+    # cross-multiplied rationals.  The oracle keeps its per-type CTE
+    # form — results are row-identical.
     ev = load_table(spark, sf_dir, "events")
     split = F.lit(_KS_SPLIT).cast("timestamp")
     base = (
