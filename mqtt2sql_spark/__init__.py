@@ -20,7 +20,7 @@ Layout:
     plans/         QuerySpecs: each query = Spark builder + DuckDB oracle SQL
     operators/     relational operators the plans share (upsert, history,
                    as-of, snapshots, graph and stats operators)
-    functions/     scalar helpers (topic wildcards, text), UDAFs, UDTFs
+    functions/     scalar expression helpers (topic wildcards, text)
     sources/       MQTT Python DataSource (WAL offsets; paho gated,
                    file-spool and memory transports)
     sinks/         upsert sink: parquet latest table + diff-only history

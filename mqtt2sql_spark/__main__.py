@@ -32,7 +32,7 @@ concept survives the re-architecture:
                           mqtt2sql.py:125)
     --max-per-trigger N   micro-batch admission bound (B4 backpressure,
                           the semaphore-50 analogue of mqtt2sql.py:461)
-    --transport KIND      paho (real broker) | file (spool dir) | memory
+    --transport KIND      paho (real broker) | file (spool dir)
     --spool-dir DIR       file-transport input directory
     --logfile F           strftime-expanded logfile name (B6,
                           mqtt2sql.py:403-407)
@@ -90,10 +90,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--wal-dir", default=None)
     p.add_argument("--timezone", default="UTC")
     p.add_argument("--max-per-trigger", type=int, default=10_000)
-    p.add_argument("--transport", default="paho",
-                   choices=("paho", "file", "memory"))
+    p.add_argument("--transport", default="paho", choices=("paho", "file"))
     p.add_argument("--spool-dir", default=None)
-    p.add_argument("--memory-key", default="default")
     p.add_argument("--logfile", default=None,
                    help="logfile name, strftime-expanded per write")
     p.add_argument("-v", "--verbose", action="count", default=0)
@@ -179,7 +177,6 @@ def main(argv: list[str] | None = None) -> int:
         "certFile": args.mqtt_certfile,
         "keyFile": args.mqtt_keyfile,
         "tlsInsecure": "true" if args.mqtt_insecure else None,
-        "memoryKey": args.memory_key if args.transport == "memory" else None,
     }
     # unset options are left out, so the source applies its own defaults
     reader = spark.readStream.format("mqtt").options(

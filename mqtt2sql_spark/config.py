@@ -118,7 +118,6 @@ _CONF_KEY_TO_OPTION: dict[str, str] = {
     "max-per-trigger": "--max-per-trigger",
     "transport": "--transport",
     "spool-dir": "--spool-dir",
-    "memory-key": "--memory-key",
     "wal-dir": "--wal-dir",
     "once": "--once",
 }

@@ -1,18 +1,14 @@
 """As-of (nearest-earlier) join — an operator Spark lacks natively.
 
-Two general two-table implementations, in the engine's preference order:
+`asof_join_window` is pure built-ins: union both sides with a sort
+marker, then one window pass per `by` key takes the last non-null right
+value over preceding rows.  One shuffle, whole-stage codegen, state
+O(1) per row.  Nearest built-in: none public — Spark SQL has no ASOF
+JOIN, and the internal `_joinAsOf` behind pandas-on-Spark's `merge_asof`
+plans as a non-equi join plus aggregate.  A cogrouped applyInPandas
+`pd.merge_asof` form measured ~14x slower at sf0.1.
 
-  * `asof_join_window` — pure built-ins: union both sides with a sort
-    marker, one window pass per `by` key taking the last non-null right
-    value over preceding rows.  One shuffle, whole-stage codegen, state
-    O(1) per row — the default.
-  * `merge_asof_join` — cogrouped applyInPandas + `pd.merge_asof` per key
-    group.  Arrow-batched but pays per-group Python/Arrow overhead
-    (~90 ms/group observed → 14 s for 150 groups at sf0.1, vs ~1 s for
-    the window form); kept for pandas-semantics parity and as the
-    template for merge logic that built-ins genuinely can't express.
-
-Scale: both shuffle by `by` (high cardinality); a single giant key is the
+Scale: it shuffles by `by` (high cardinality); a single giant key is the
 caveat — salt + two-pass merge if one key exceeds task memory.
 """
 
@@ -82,58 +78,4 @@ def asof_join_window(
             *lcols,
             *[F.col(f"_rm.{c}").alias(r) for c, r in zip(right_cols, renamed)],
         )
-    )
-
-
-def merge_asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    right_cols: list[str],
-    suffix: str = "_right",
-    allow_exact: bool = False,
-) -> DataFrame:
-    """For each left row, attach the latest right row with
-    right.on < left.on (or <= when allow_exact) within the same `by` group.
-
-    Returns left columns + [f"{c}{suffix}" for c in right_cols]
-    (null-extended when no earlier right row exists — LEFT ASOF).
-    """
-    import pandas as pd
-
-    left_fields = left.schema.fields
-    right_schema = right.select(on, *right_cols).schema
-    out_fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in left_fields]
-    for c in right_cols:
-        dt = right_schema[c].dataType.simpleString()
-        out_fields.append(f"`{c}{suffix}` {dt}")
-    out_schema = ", ".join(out_fields)
-
-    lcols = [f.name for f in left_fields]
-
-    def merge(key, ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        ldf = ldf.sort_values(on, kind="mergesort")
-        if rdf.empty:
-            out = ldf.copy()
-            for c in right_cols:
-                out[f"{c}{suffix}"] = None
-            return out
-        rdf = (
-            rdf[[on] + right_cols]
-            .rename(columns={c: f"{c}{suffix}" for c in right_cols})
-            .sort_values(on, kind="mergesort")
-        )
-        return pd.merge_asof(
-            ldf,
-            rdf,
-            on=on,
-            allow_exact_matches=allow_exact,
-            direction="backward",
-        )[lcols + [f"{c}{suffix}" for c in right_cols]]
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.select(by, on, *right_cols).groupBy(by))
-        .applyInPandas(merge, out_schema)
     )

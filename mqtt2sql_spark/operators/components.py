@@ -34,6 +34,10 @@ growing lineage, which would otherwise re-execute the whole history
 every iteration.  The min-relation joins carry explicit shuffle_hash
 hints — they are corpus-grain build sides, the class the planner's
 static row estimates provably mis-broadcast (r07 rule).
+
+Nearest built-in: none — Spark has no connected-components operator
+without GraphFrames, which this project does not depend on, so this
+module stays.
 """
 
 from __future__ import annotations

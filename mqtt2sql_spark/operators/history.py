@@ -10,6 +10,10 @@ Batch operator: broadcast join against the control dimension + one lag
 window per topic.  The streaming form (sinks/upsert.MqttUpsertSink) seeds
 that lag with the pre-batch `mqtt` value per topic, so suppression works
 across micro-batches without a state store.
+
+Nearest built-in: it is built-ins (a broadcast join and one `lag`
+window); the module stays so the batch query and the streaming sink share
+one implementation of the diff-only rule.
 """
 
 from __future__ import annotations

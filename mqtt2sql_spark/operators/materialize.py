@@ -31,6 +31,9 @@ iterative operators) so long jobs survive executor churn; the local
 bench keeps the localCheckpoint default because eager local snapshots
 are measurably faster at local[32] and node loss cannot happen in a
 single JVM.
+
+Nearest built-ins: `localCheckpoint` and `persist` themselves; the
+module stays as the one switch between them.
 """
 
 from __future__ import annotations

@@ -20,6 +20,10 @@ once per iteration (pre-partitioning it on src makes every iteration's
 join co-located); the rank relation is |V| rows.  Lineage is truncated
 with a lazy localCheckpoint every few iterations — the dedup_components
 treatment for iterative plans.
+
+Nearest built-in: none in PySpark — PageRank lives in GraphX (Scala
+only) and GraphFrames, neither a dependency of this project, so this
+module stays.
 """
 
 from __future__ import annotations

@@ -18,6 +18,10 @@ vanishes from the plan.
 
 Chainable: ``load_table(spark, sf_dir, "documents").transform(fan_out,
 spark, "doc_id")``.
+
+Nearest built-in: `repartition`; `fan_out` stays because the fixtures
+are single-row-group files that Spark reads as one split, while an
+unconditional repartition would shuffle a many-split input for nothing.
 """
 
 from __future__ import annotations

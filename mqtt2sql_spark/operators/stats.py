@@ -17,6 +17,10 @@ and blocks are non-recoverable on executor loss), switchable to
 ``MQTT2SQL_RELIABLE_SNAPSHOT=1`` for multi-executor cluster runs.
 Eager local snapshots stay the local default because they guarantee a
 single deterministic materialization across plan branches on local[N].
+
+Nearest built-in: none — `pyspark.ml.stat.KolmogorovSmirnovTest` is a
+one-sample float test and Spark has no Mann-Whitney; the module stays
+because the KS and Mann-Whitney queries share its exact-integer forms.
 """
 
 from __future__ import annotations

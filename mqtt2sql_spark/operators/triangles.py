@@ -14,6 +14,10 @@ gracefully to a shuffle join — still no wedge materialization.
 
 Shared by triangle_count_copurchase and global_clustering_coefficient
 (plans/analytics.py, plans/similarity.py).
+
+Nearest built-in: none in PySpark — triangle counting lives in GraphX
+(Scala only) and GraphFrames, neither a dependency of this project, so
+this module stays.
 """
 
 from __future__ import annotations

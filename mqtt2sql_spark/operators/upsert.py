@@ -5,6 +5,10 @@ Batch form of the reference's INSERT..ON DUPLICATE KEY UPDATE
 (order) per key.  One row_number window — a single hash shuffle on the
 key; at stream scale the same logic runs per micro-batch with the merge
 done by the sink (sinks/upsert.py).
+
+Nearest built-in: a `max_by(struct)` aggregate would do the same; the
+module stays so the fixtures and the streaming sink share one upsert
+rule with one tie-break order.
 """
 
 from __future__ import annotations

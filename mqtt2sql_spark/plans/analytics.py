@@ -227,7 +227,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="As-of join, window encoding: for each purchase, the most recent "
     "strictly-earlier click by the same user — one shuffle by user_id, no "
-    "join.  The applyInPandas merge_asof form is operators/asof.py "
+    "join.  The general two-table form is operators/asof.py "
     "(query key asof_join_purchase_click).",
 )
 def asof_last_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3038,7 +3038,7 @@ def dq_rule_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- vectorized UDAF (pandas grouped-agg): trimmed mean ---------------------
+# --- trimmed mean -----------------------------------------------------------
 
 
 @register(
@@ -3061,42 +3061,36 @@ def dq_rule_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn > n // 10 AND rn <= n - n // 10
     GROUP BY o_orderpriority
     """,
-    doc="10%-trimmed mean via a VECTORIZED PYTHON UDAF (pandas_udf "
-    "GROUPED_AGG): each group's order values arrive as one Arrow batch, "
-    "numpy sorts by (cents, orderkey) total order, and the robust mean "
-    "excludes n//10 rows per tail — the outlier-resistant location "
-    "estimate plain AVG can't give and Catalyst has no builtin for.  "
-    "Arithmetic is exact-integer end-to-end (cents in, integer "
-    "division out) so pandas and DuckDB agree bit-for-bit despite "
-    "different summation orders.  This completes the UDx surface "
-    "demonstration: scalar pandas_udf (LSH einsum), UDAF here, UDTF "
-    "(topic_ancestors_udtf) — all Arrow-vectorized, the reference has "
-    "none (SURVEY §2 C).  Note the distributed caveat honestly: a "
-    "grouped-agg UDAF materializes each group on one executor, fine "
-    "for bounded groups (5 priorities), wrong for unbounded keys — "
-    "exact trimming at that scale needs the window form the oracle "
-    "uses.",
+    doc="10%-trimmed mean of order value per priority: drop n//10 "
+    "rows from each tail and average the rest — the outlier-resistant "
+    "location estimate plain AVG can't give.  Each group's exact "
+    "integer cents are collected and sorted (sort_array), the middle "
+    "is sliced out and summed with a higher-order aggregate, then "
+    "integer-divided, so both engines agree bit-for-bit.  The oracle's "
+    "(cents, orderkey) tie-break only orders equal cents, so the kept "
+    "multiset, and the sum, is the same without it.  One group becomes "
+    "one array row: fine for the 5 priorities, wrong for unbounded "
+    "keys, which need the oracle's row_number / count window form "
+    "(measured slower at sf0.1).",
 )
 def trimmed_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mqtt2sql_spark.functions.udafs import (
-        trimmed_count,
-        trimmed_mean_cents,
-    )
-
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    base = o.select(
-        "o_orderpriority", cents.alias("cents"), "o_orderkey"
+    per = o.groupBy("o_orderpriority").agg(
+        F.sort_array(F.collect_list(cents)).alias("v")
     )
-    return base.groupBy("o_orderpriority").agg(
-        trimmed_count(F.col("cents")).alias("n_kept"),
-        trimmed_mean_cents(F.col("cents"), F.col("o_orderkey")).alias(
-            "trimmed_mean_cents"
-        ),
+    return per.selectExpr(
+        "o_orderpriority",
+        "slice(v, size(v) DIV 10 + 1, size(v) - 2 * (size(v) DIV 10)) AS kept",
+    ).selectExpr(
+        "o_orderpriority",
+        "CAST(size(kept) AS BIGINT) AS n_kept",
+        "aggregate(kept, 0L, (acc, c) -> acc + c) DIV size(kept)"
+        " AS trimmed_mean_cents",
     )
 
 
-# --- Python UDTF surface ----------------------------------------------------
+# --- topic ancestors ----------------------------------------------------------
 
 
 @register(
@@ -3114,34 +3108,25 @@ def trimmed_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(DISTINCT topic) AS BIGINT) AS n_topics
     FROM levels GROUP BY 1
     """,
-    doc="Python UDTF demonstration (Spark 4 `udtf` API, the table-"
-    "function leg of the UDx triad alongside the scalar pandas_udf in "
-    "the LSH einsum and the GROUPED_AGG UDAF in trimmed_mean_price): "
-    "each DISTINCT topic lateral-joins to its ancestor chain via a "
-    "generator class, then distinct-topic counts roll up per subtree "
-    "node — how many concrete topics a '#' subscription at each node "
-    "covers.  Input is the distinct-topic dimension (small), so the "
-    "row-based Python generator touches |topics| rows, not |messages| "
-    "— the honest way to use a slow-path UDTF; the message-volume "
-    "rollup keeps its pure-expression form (topic_hierarchy_rollup).",
-    tags=("slow-path-demo",),
+    doc="Distinct topics under each subscription-tree node: every "
+    "DISTINCT topic expands to its ancestor chain (explode over "
+    "sequence(1, levels), concat_ws of the first depth levels), then "
+    "a count per ancestor — how many concrete topics a '#' "
+    "subscription at each node covers.  A topic yields each ancestor "
+    "once (prefixes differ in level count), so count(*) equals the "
+    "oracle's count(DISTINCT topic).  The message-volume rollup over "
+    "the same expansion is topic_hierarchy_rollup.",
 )
 def topic_ancestors_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mqtt2sql_spark.functions.udtfs import TopicAncestors
-
-    spark.udtf.register("topic_ancestors", TopicAncestors)
-    messages(spark, sf_dir).select("topic").distinct().createOrReplaceTempView(
-        "_udtf_topics"
+    topics = messages(spark, sf_dir).select("topic").distinct()
+    parts = F.split(F.col("topic"), "/")
+    lv = topics.select(
+        parts.alias("parts"),
+        F.explode(F.sequence(F.lit(1), F.size(parts))).alias("depth"),
     )
-    return spark.sql(
-        """
-        SELECT a.ancestor,
-               CAST(count(DISTINCT t.topic) AS BIGINT) AS n_topics
-        FROM _udtf_topics t,
-        LATERAL topic_ancestors(t.topic) a
-        GROUP BY a.ancestor
-        """
-    )
+    return lv.groupBy(
+        F.concat_ws("/", F.slice("parts", 1, F.col("depth"))).alias("ancestor")
+    ).agg(F.count(F.lit(1)).cast("long").alias("n_topics"))
 
 
 # --- join cardinality estimation by correlated key sampling -----------------
@@ -4948,6 +4933,26 @@ def copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- skyline (Pareto frontier) of parts ------------------------------------
 
 
+def skyline_min_min(df: DataFrame, x: str, y: str) -> DataFrame:
+    """Rows of ``df`` that no other row dominates, minimizing integer
+    columns ``x`` and ``y``: b dominates a when b.x <= a.x and
+    b.y <= a.y with one inequality strict, so exact (x, y) duplicates
+    all survive.  A row is kept iff its y is the minimum at its own x
+    and below every y at a smaller x."""
+    min_here = F.min(y).over(W.partitionBy(x))
+    min_below = F.min(y).over(
+        W.orderBy(x).rangeBetween(W.unboundedPreceding, -1)
+    )
+    return (
+        df.withColumns({"_min_here": min_here, "_min_below": min_below})
+        .filter(
+            (F.col(y) == F.col("_min_here"))
+            & (F.col("_min_below").isNull() | (F.col(y) < F.col("_min_below")))
+        )
+        .drop("_min_here", "_min_below")
+    )
+
+
 @register(
     "skyline_parts",
     oracle="""
@@ -4966,20 +4971,16 @@ def copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Skyline (Pareto frontier) of parts minimizing (retail price, "
     "size): the multi-criteria shortlist operator relational algebra "
-    "lacks.  Two-phase distributed skyline (Börzsönyi et al., ICDE "
-    "2001): an Arrow-batched partition-local sort-filter-skyline "
-    "prunes every partition to its own frontier with NO shuffle, and "
-    "only the tiny union of local frontiers is coalesced for the "
-    "global sweep — the exact-domination oracle is a quadratic "
-    "NOT EXISTS anti-join, which is the semantics but not the plan.  "
-    "Prices are quantized to exact cents BEFORE the sweep so every "
-    "comparison is integer on both engines; equal (price, size) "
-    "duplicates are mutually non-dominating and all survive.",
-    tags=("operator", "pandas"),
+    "lacks.  Two built-in windows replace the quadratic NOT EXISTS "
+    "anti-join of the oracle: a row survives iff its size is the "
+    "minimum at its own price AND strictly below every size at a "
+    "lower price (a RANGE frame ending 1 PRECEDING).  Prices are "
+    "quantized to exact cents first so every comparison is integer "
+    "on both engines; equal (price, size) duplicates are mutually "
+    "non-dominating and all survive.",
+    tags=("operator",),
 )
 def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mqtt2sql_spark.operators.skyline import skyline_min_min
-
     pts = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").cast("long").alias("p_partkey"),
         F.expr("CAST(round(p_retailprice * 100, 0) AS BIGINT)").alias(
@@ -8780,8 +8781,9 @@ def abc_parts_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     return classed.groupBy("abc_class").agg(
         F.count(F.lit(1)).cast("long").alias("n_parts"),
         F.expr("CAST(sum(rev) DIV 10000 AS BIGINT)").alias("revenue_cents"),
+        # 1e6 x a cents-grain sum overflows BIGINT on a 10x replica
         F.expr(
-            "CAST((sum(rev) DIV 10000) * 1000000"
+            "CAST(CAST(sum(rev) DIV 10000 AS DECIMAL(38,0)) * 1000000"
             " DIV max(tot DIV 10000) AS BIGINT)"
         ).alias("share_ppm"),
     )

@@ -4,11 +4,10 @@ Multimodal contract (SURVEY.md §7.1 M5): media travels as an opaque
 `binary` column plus typed metadata — exactly how the reference treats
 its payload (LONGBLOB, /root/reference/mysql.sql:46) — and per-batch
 Python work happens in Arrow-batched `mapInPandas`, never per-row UDFs.
-The container has no image/audio codecs, so the real decoders raise
-NotImplementedError behind a flag, while `fake_decode_meta` is a
-deterministic stand-in that keeps every piece of Spark-side plumbing
-(binary column, batch iteration, schema, partitioning) real and
-oracle-checkable.
+No query decodes real media: `fake_decode_meta` is a deterministic
+stand-in that keeps every piece of Spark-side plumbing (binary column,
+batch iteration, schema, partitioning) real and oracle-checkable.  A
+real codec would replace it inside the same `mapInPandas` stage.
 """
 
 from __future__ import annotations
@@ -23,58 +22,6 @@ from mqtt2sql_spark.operators.materialize import snapshot
 from mqtt2sql_spark.fixtures import load_table
 from mqtt2sql_spark.operators.partitioning import fan_out
 from mqtt2sql_spark.plans.base import register
-
-try:  # optional-import escape hatch: real codecs when the machine has them
-    from PIL import Image as _PILImage  # noqa: N812
-
-    REAL_CODECS_AVAILABLE = True
-except ImportError:  # no PIL/ffmpeg in this container
-    _PILImage = None
-    REAL_CODECS_AVAILABLE = False
-
-
-def decode_image_real(payload: bytes) -> dict:
-    """Real image decode (PIL when installed, else NotImplementedError).
-    Returns the typed metadata the fake path fabricates: n_bytes, width,
-    height, channels, format."""
-    if not REAL_CODECS_AVAILABLE:
-        raise NotImplementedError(
-            "image codecs are not available in this environment; "
-            "use fake_decode_meta (deterministic) for plumbing tests"
-        )
-    import io
-
-    with _PILImage.open(io.BytesIO(payload)) as im:
-        im.load()
-        return {
-            "n_bytes": len(payload),
-            "width": im.width,
-            "height": im.height,
-            "channels": len(im.getbands()),
-            "format": im.format,
-        }
-
-
-def resize_image_real(payload: bytes, box: int = 224) -> bytes:
-    """Real aspect-preserving resize into a ``box`` px square (PIL when
-    installed) — the pixel half of multimodal_resize_dims; returns PNG
-    bytes.  The geometry matches the integer arithmetic in the
-    multimodal_resize_dims plan ((edge*box)//longest, min 1)."""
-    if not REAL_CODECS_AVAILABLE:
-        raise NotImplementedError(
-            "image codecs are not available in this environment"
-        )
-    import io
-
-    with _PILImage.open(io.BytesIO(payload)) as im:
-        im.load()
-        longest = max(im.width, im.height)
-        out_w = max(1, (im.width * box) // longest)
-        out_h = max(1, (im.height * box) // longest)
-        resized = im.resize((out_w, out_h))
-        buf = io.BytesIO()
-        resized.save(buf, format="PNG")
-        return buf.getvalue()
 
 
 def fake_decode_meta(payload: bytes) -> tuple[int, int, int, int, int]:
@@ -147,10 +94,9 @@ def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="General two-table as-of join (operators/asof.py asof_join_window: "
     "union + ignore-nulls last over a per-user window — one shuffle, "
-    "codegen; strictly-earlier match, left-extended).  The pandas "
-    "merge_asof variant exists for API parity but pays ~90 ms/group "
-    "Python overhead — built-ins win.  Oracle: DuckDB's native ASOF "
-    "LEFT JOIN.",
+    "codegen; strictly-earlier match, left-extended).  Built-ins win: "
+    "a pandas merge_asof form pays ~90 ms/group of Python overhead.  "
+    "Oracle: DuckDB's native ASOF LEFT JOIN.",
 )
 def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mqtt2sql_spark.operators.asof import asof_join_window
@@ -270,8 +216,7 @@ TARGET_BOX = 224  # resize target (longest edge), CNN-preprocessing style
     doc="Multimodal resize plumbing: aspect-preserving fit of each "
     f"(width, height) into a {TARGET_BOX}px box in exact integer "
     "arithmetic ((edge*T)//longest) — the geometry half of an image "
-    "resize stage; the pixel transform itself is the stubbed codec "
-    "(REAL_CODECS_AVAILABLE, decode_image_real).  Dims come from the "
+    "resize stage; no query transforms pixels.  Dims come from the "
     "same deterministic fake decode as multimodal_decode_meta; pure "
     "per-row projection, no shuffle.",
 )

@@ -9,8 +9,8 @@ chosen to also be correct on a 1000-executor cluster at ~100 TB:
   reference stores UTC and renders per-session tz
   (/root/reference/mqtt2sql.py:304-312, README.md:237-251) — we do the
   same via session tz + from_utc_timestamp (SURVEY.md §2 A12).
-- Arrow enabled: every Python-side operator in this engine is
-  Arrow-batched (pandas UDF / applyInPandas), never row-at-a-time.
+- Arrow enabled for the Python-side operators that remain (pandas UDF,
+  mapInPandas, applyInPandas); none is row-at-a-time.
 """
 
 from __future__ import annotations

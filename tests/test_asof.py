@@ -1,59 +1,10 @@
-"""merge_asof_join operator (operators/asof.py)."""
+"""As-of join operator (operators/asof.py asof_join_window)."""
 
 import datetime as dt
 
 
 def _ts(s):
     return dt.datetime.fromisoformat(s)
-
-
-def test_merge_asof_strictly_earlier(spark):
-    from mqtt2sql_spark.operators.asof import merge_asof_join
-
-    left = spark.createDataFrame(
-        [
-            (1, _ts("2024-01-01T10:00:00"), 100),
-            (1, _ts("2024-01-01T12:00:00"), 101),
-            (2, _ts("2024-01-01T09:00:00"), 102),
-        ],
-        "user_id long, ts timestamp, event_id long",
-    )
-    right = spark.createDataFrame(
-        [
-            (1, _ts("2024-01-01T10:00:00"), 200),  # exact ts: must NOT match
-            (1, _ts("2024-01-01T11:30:00"), 201),
-            (3, _ts("2024-01-01T08:00:00"), 300),  # other user
-        ],
-        "user_id long, ts timestamp, click_id long",
-    )
-    out = {
-        r.event_id: r.click_id_right
-        for r in merge_asof_join(
-            left, right, on="ts", by="user_id", right_cols=["click_id"],
-            suffix="_right",
-        ).collect()
-    }
-    assert out[100] is None      # only an exact-ts right row exists
-    assert out[101] == 201       # latest strictly-earlier
-    assert out[102] is None      # user 2 has no right rows at all
-
-
-def test_merge_asof_allow_exact(spark):
-    from mqtt2sql_spark.operators.asof import merge_asof_join
-
-    left = spark.createDataFrame(
-        [(1, _ts("2024-01-01T10:00:00"), 1)],
-        "user_id long, ts timestamp, event_id long",
-    )
-    right = spark.createDataFrame(
-        [(1, _ts("2024-01-01T10:00:00"), 9)],
-        "user_id long, ts timestamp, click_id long",
-    )
-    out = merge_asof_join(
-        left, right, on="ts", by="user_id", right_cols=["click_id"],
-        allow_exact=True,
-    ).collect()
-    assert out[0].click_id_right == 9
 
 
 def test_window_asof_matches_merge_asof_semantics(spark):

@@ -90,10 +90,18 @@ sql-timezone = Europe/Berlin
 
 
 def test_config_file_unknown_key_fails_fast(tmp_path):
+    from mqtt2sql_spark.__main__ import build_parser
+
     conf = tmp_path / "bad.conf"
     conf.write_text("no-such-option = 1\n")
     with pytest.raises(ValueError, match="no-such-option"):
         config_file_argv(str(conf))
+    # the in-process memory queue is a test fake, not a daemon transport
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(
+            ["--storage-dir", "/s", "--checkpoint-dir", "/c",
+             "--transport", "memory"]
+        )
 
 
 def test_cli_overrides_config_file(tmp_path):

@@ -1,53 +1,7 @@
-"""Multimodal codec escape hatch: the real PIL path when the machine has
-codecs (skipped here — this container has none), and the stub contract
-when it does not.
+"""Multimodal plumbing: the deterministic fake decode every multimodal
+query runs in place of a real media codec."""
 
-Uninstallability proof (r06, re-probed r07 2026-08-15): ``pip install
-pillow protobuf`` fails with DNS resolution errors on every retry
-(`Failed to establish a new connection: [Errno -2] Name or service not
-known` against the configured index, final `No matching distribution
-found`) — the sandbox has no network egress, so Pillow cannot be
-installed.  The real-codec CODE PATH is therefore exercised offline via
-tests/_fake_pil.py (stdlib-only PNG codec) in
-test_real_codec_path_offline below; the remaining skip is only the
-genuine-Pillow integration run."""
-
-import pytest
-
-from mqtt2sql_spark.plans.multimodal import (
-    REAL_CODECS_AVAILABLE,
-    decode_image_real,
-    fake_decode_meta,
-    resize_image_real,
-)
-
-
-@pytest.mark.skipif(not REAL_CODECS_AVAILABLE, reason="PIL not installed")
-def test_real_decode_roundtrip():
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (640, 480), (10, 20, 30)).save(buf, format="PNG")
-    payload = buf.getvalue()
-    meta = decode_image_real(payload)
-    assert meta["width"] == 640 and meta["height"] == 480
-    assert meta["channels"] == 3 and meta["format"] == "PNG"
-    assert meta["n_bytes"] == len(payload)
-
-    out = resize_image_real(payload, box=224)
-    with Image.open(io.BytesIO(out)) as im:
-        # aspect-preserving integer fit, same arithmetic as the plan
-        assert (im.width, im.height) == (224, (480 * 224) // 640)
-
-
-@pytest.mark.skipif(REAL_CODECS_AVAILABLE, reason="PIL installed")
-def test_stub_raises_not_implemented():
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"\x89PNG")
-    with pytest.raises(NotImplementedError):
-        resize_image_real(b"\x89PNG")
+from mqtt2sql_spark.plans.multimodal import fake_decode_meta
 
 
 def test_fake_decode_is_deterministic():
@@ -55,33 +9,3 @@ def test_fake_decode_is_deterministic():
     assert a == fake_decode_meta(b"hello world")
     n = len(b"hello world")
     assert a == (n, 64 + n % 512, 64 + (n * 7) % 512, 3, b"h"[0])
-
-
-def test_real_codec_path_offline(monkeypatch):
-    """Exercise the REAL-codec code path (decode metadata extraction +
-    aspect-preserving resize geometry) without Pillow, which cannot
-    install here (no network egress — `pip download pillow` fails DNS).
-    tests/_fake_pil.py is a stdlib-only PNG codec implementing the
-    PIL.Image surface these functions touch; swap it in for _PILImage
-    and run the same assertions as the PIL-gated roundtrip above."""
-    import io
-
-    import mqtt2sql_spark.plans.multimodal as mm
-    import tests._fake_pil as fake_pil
-
-    monkeypatch.setattr(mm, "_PILImage", fake_pil)
-    monkeypatch.setattr(mm, "REAL_CODECS_AVAILABLE", True)
-
-    buf = io.BytesIO()
-    fake_pil.new("RGB", (640, 480), (10, 20, 30)).save(buf, format="PNG")
-    payload = buf.getvalue()
-
-    meta = mm.decode_image_real(payload)
-    assert meta["width"] == 640 and meta["height"] == 480
-    assert meta["channels"] == 3 and meta["format"] == "PNG"
-    assert meta["n_bytes"] == len(payload)
-
-    out = mm.resize_image_real(payload, box=224)
-    with fake_pil.open(io.BytesIO(out)) as im:
-        # aspect-preserving integer fit, same arithmetic as the plan
-        assert (im.width, im.height) == (224, (480 * 224) // 640)

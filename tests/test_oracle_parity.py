@@ -13,7 +13,7 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
 
-from check_oracle import arrow_type_violations, df_digest  # noqa: E402
+from check_oracle import arrow_type_violations, df_digest, jvm_gone  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -72,6 +72,10 @@ def duck():
         "value_drift_ks_by_type",
         "watermark_delay_sweep",
         "winback_rate",
+        # skyline, trimmed mean and topic ancestors on built-ins
+        "skyline_parts",
+        "trimmed_mean_price",
+        "topic_ancestors_udtf",
     ],
 )
 def test_query_matches_its_oracle(spark, duck, name):
@@ -94,3 +98,16 @@ def test_query_matches_its_oracle(spark, duck, name):
     assert arrow_type_violations(otable.schema, spark_decimal_cols) == []
     assert sorted(sdf.columns) == sorted(ocols)
     assert df_digest(sdf.columns, srows) == df_digest(ocols, orows)
+
+
+def test_jvm_loss_is_told_apart_from_a_query_error():
+    """check_oracle stops on a lost JVM instead of failing every later
+    query as a parity break."""
+    from py4j.protocol import Py4JNetworkError
+
+    assert jvm_gone(ConnectionRefusedError(111, "Connection refused"))
+    assert jvm_gone(Py4JNetworkError("Answer from Java side is empty"))
+    wrapped = RuntimeError("collect failed")
+    wrapped.__cause__ = ConnectionResetError()
+    assert jvm_gone(wrapped)
+    assert not jvm_gone(ValueError("[ARITHMETIC_OVERFLOW] long overflow"))

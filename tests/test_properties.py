@@ -306,10 +306,10 @@ points_strategy = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(points_strategy, st.integers(min_value=1, max_value=5))
 def test_skyline_matches_bruteforce_under_partitioning(spark, pts, n_parts):
-    """Two-phase distributed skyline == O(n²) domination brute force,
-    for any physical partitioning (multiset semantics: equal points are
+    """Window-form skyline == O(n²) domination brute force, for any
+    physical partitioning (multiset semantics: equal points are
     mutually non-dominating and every copy survives)."""
-    from mqtt2sql_spark.operators.skyline import skyline_min_min
+    from mqtt2sql_spark.plans.analytics import skyline_min_min
 
     rows = [(i, x, y) for i, (x, y) in enumerate(pts)]
 

@@ -1,6 +1,7 @@
 """Scale-pattern correctness: approximate sketches, partition pruning,
 plan shapes — the techniques the 100 TB deployment leans on."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -100,18 +101,19 @@ def test_hll_is_two_hash_aggregates(spark):
     assert plan.count("HashAggregate") >= 4  # partial+final × register/total
 
 
-def test_skyline_local_phase_has_no_shuffle(spark):
-    """The partition-local skyline prune must run shuffle-free: the only
-    exchange in the whole plan is the coalesce(1) for the tiny global
-    sweep (SinglePartition), never a hash exchange of the input."""
-    from mqtt2sql_spark.plans.analytics import skyline_parts
-    from tests.conftest import SF_DIR
+@pytest.mark.parametrize(
+    "name", ["skyline_parts", "trimmed_mean_price", "topic_ancestors_udtf"]
+)
+def test_queries_plan_without_python_nodes(spark, name):
+    """The skyline, trimmed mean and topic-ancestor queries run on
+    Spark built-ins: no Python node is left in the executed plan."""
+    from mqtt2sql_spark.registry import all_specs
 
-    df = skyline_parts(spark, SF_DIR)
-    jvm = spark.sparkContext._jvm
-    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
-    assert "Exchange hashpartitioning" not in plan
-    assert plan.count("MapInPandas") == 2
+    df = all_specs()[name].fn(spark, SF_DIR)
+    assert df.collect()
+    plan = _plan(spark, df)  # after collect: AQE's final plan
+    for node in ("MapInPandas", "ArrowAggregatePython", "BatchEvalPythonUDTF"):
+        assert node not in plan, (name, node)
 
 
 def test_pagerank_iterations_aggregate_partially(spark):

@@ -144,13 +144,7 @@ def main() -> int:
         if "CartesianProduct" in plan:
             flags.append("cartesian")
         if "BatchEvalPython" in plan or "PythonUDTF" in plan:
-            # specs tagged slow-path-demo deliberately exercise a
-            # row-based Python API (e.g. the UDTF surface demo over a
-            # dimension-sized input) — annotate, don't red-flag
-            if "slow-path-demo" in spec.tags:
-                flags.append("row-py(documented-demo)")
-            else:
-                flags.append("row-at-a-time-py")
+            flags.append("row-at-a-time-py")
         if any(
             f == "cartesian"
             or f == "row-at-a-time-py"

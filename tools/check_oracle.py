@@ -7,6 +7,10 @@ to be: values are compared exactly after canonicalization (timestamps →
 ISO strings, floats → repr of float64, bytes → hex).
 
 Usage:  python tools/check_oracle.py [sf_dir] [query ...]
+
+Exit status: 0 when every query matches, 1 on any parity failure, 2 when
+the Spark JVM dies mid-run (the query it died on and the count left
+unchecked are printed; those queries are not reported as failures).
 """
 
 from __future__ import annotations
@@ -107,6 +111,18 @@ def df_digest(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()
 
 
+def jvm_gone(exc: BaseException) -> bool:
+    """True when ``exc`` means py4j lost the Spark JVM (killed, e.g. by
+    the OOM killer) rather than that a query failed."""
+    from py4j.protocol import Py4JNetworkError
+
+    while exc is not None:
+        if isinstance(exc, (Py4JNetworkError, ConnectionError)):
+            return True
+        exc = exc.__cause__ or exc.__context__
+    return False
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -132,7 +148,7 @@ def main() -> int:
     else:
         from mqtt2sql_spark.session import get_spark
 
-        spark = get_spark("check_oracle", cpus=8)
+        spark = get_spark("check_oracle")
     con = duckdb.connect()
     from mqtt2sql_spark.fixtures import TABLES
 
@@ -143,14 +159,23 @@ def main() -> int:
         )
 
     n_pass = n_fail = n_rowsonly = 0
-    for name, spec in sorted(all_specs().items()):
-        if only and name not in only:
-            continue
+    todo = [
+        (name, spec) for name, spec in sorted(all_specs().items())
+        if not only or name in only
+    ]
+    for i, (name, spec) in enumerate(todo):
         try:
             sdf = spec.fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
             scols = sdf.columns
         except Exception as e:
+            if jvm_gone(e):
+                print(f"ABORT {name}: the Spark JVM is gone ({e})")
+                print(
+                    f"\n{n_pass} ok, {n_rowsonly} rows-only, {n_fail} failed,"
+                    f" {len(todo) - i} unchecked"
+                )
+                return 2
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
             continue
